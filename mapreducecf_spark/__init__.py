@@ -16,7 +16,8 @@ Design principles (SURVEY.md §7):
   DAGScheduler and Exchange are their production-grade replacements.
 - Python stays out of the hot path: built-in ``pyspark.sql.functions``
   everywhere; Arrow-batched Pandas UDFs only where built-ins genuinely
-  cannot express the semantics (multimodal decode); never row-at-a-time
+  cannot express the semantics (multimodal decode: WAV PCM, PNG, BMP and
+  PNM natively, other codecs at one plug-in point); never row-at-a-time
   Python UDFs.
 """
 

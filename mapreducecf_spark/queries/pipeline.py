@@ -2290,7 +2290,7 @@ def pipe_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     {DP_EPSILON}, sensitivity 1. The noise is sampled by INVERSE CDF
     from an md5-derived uniform keyed on the cell — a deterministic
     keystream standing in for the secure RNG a real deployment uses
-    (the repo's stub discipline, cf. the multimodal codecs: the
+    (the repo's stub discipline, cf. the multimodal fake decoders: the
     MECHANISM — sensitivity, scale, inverse-CDF transform, integer
     publication units — is real and oracle-replayable; the entropy
     source is swapped). The exact count column is retained HERE so the

@@ -57,6 +57,19 @@ _TOKS = (
 STOPWORDS = ("the", "a", "an", "of", "to", "and", "in", "is", "it", "that")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
+
+def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table with the adaptive input spread applied
+    (sources.spread over the MODULE-LOCAL ``load_table``, which pytest
+    monkeypatches to plant synthetic corpora) — guide §2.5: the
+    single-row-group test layout scans as ONE task, serializing every
+    tokenize/explode corpus pass; a layout that already splits passes
+    through untouched."""
+    return spread(
+        spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"), "doc_id"
+    )
+
+
 # ---------------------------------------------------------------------
 # corpus-level stats
 # ---------------------------------------------------------------------
@@ -73,18 +86,6 @@ FROM documents
 GROUP BY lang, source
 """,
 )
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents table with the adaptive input spread applied
-    (sources.spread over the MODULE-LOCAL ``load_table``, which pytest
-    monkeypatches to plant synthetic corpora) — guide §2.5: the
-    single-row-group test layout scans as ONE task, serializing every
-    tokenize/explode corpus pass; a layout that already splits passes
-    through untouched."""
-    return spread(
-        spark, sf_dir, "documents", load_table(spark, sf_dir, "documents"), "doc_id"
-    )
-
-
 def text_stats_by_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus profile: one partial-aggregated groupBy, reads only the 3
     needed columns (column pruning leaves `text` on disk)."""

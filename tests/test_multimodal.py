@@ -67,25 +67,41 @@ def test_catalog_prunes_payload_from_the_scan(spark, sf_dir):
 
 
 def test_decode_codec_boundary_and_malformed_errors(spark):
-    """Formats that need a native codec raise NotImplementedError (the
-    deployment plug-in point); malformed payloads of a RECOGNIZED
-    container raise ValueError (the drop-don't-crash error path)."""
+    """Every format other than PNG/BMP/PNM images and RIFF/WAVE integer
+    PCM raises NotImplementedError (the single deployment plug-in
+    point); malformed payloads of a DECODED format raise ValueError
+    (the drop-don't-crash error path)."""
+    import struct
+
     from mapreducecf_spark.multimodal import decode_audio, decode_image
 
-    with pytest.raises(ValueError):
-        # LOSSY WebP (VP8 intra) decodes natively since r17, so a
-        # garbage VP8 chunk is a malformed payload, not a plug-in case
-        decode_image(
-            b"RIFF\x10\x00\x00\x00WEBPVP8 \x04\x00\x00\x00\x00\x00\x00\x00"
+    def wav_with_tag(tag):
+        fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8)
+        data = bytes(16)
+        return (
+            b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
+            + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
         )
-    with pytest.raises(ValueError):
-        # a WEBP container whose chunk header is truncated before any
-        # decodable chunk is malformed, not a plug-in case
-        decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0JFIF-ish")  # truncated JPEG
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"ID3\x04mp3-ish")  # compressed audio
+
+    for payload in (
+        b"\xff\xd8\xff\xe0JFIF-ish",  # JPEG
+        b"GIF89a\x02\x00\x02\x00",  # GIF
+        b"II*\x00\x08\x00\x00\x00",  # TIFF, little-endian
+        b"MM\x00*\x00\x00\x00\x08",  # TIFF, big-endian
+        b"RIFF\x10\x00\x00\x00WEBPVP8 \x04\x00\x00\x00\x00\x00\x00\x00",  # WebP
+    ):
+        with pytest.raises(NotImplementedError):
+            decode_image(payload)
+    for payload in (
+        b"fLaC\x00\x00\x00\x22",  # FLAC
+        b"ID3\x04mp3-ish",  # compressed audio
+        wav_with_tag(0x11),  # IMA-ADPCM
+        wav_with_tag(0x07),  # G.711 mu-law
+    ):
+        with pytest.raises(NotImplementedError):
+            decode_audio(payload)
+    decode_audio(wav_with_tag(0x01))  # the same container as PCM decodes
     with pytest.raises(ValueError):
         decode_audio(b"RIFF\x00\x00\x00\x00WAVE")  # truncated WAV
     with pytest.raises(ValueError):
@@ -275,7 +291,7 @@ def test_decode_roundtrip_property(spark):
 
 def test_arrow_stage_runs_real_codecs_end_to_end(spark):
     """The codec-agnostic claim, executed: the SAME mapInPandas stages
-    the graded queries use run over REAL PNG / WAV payloads with the
+    the graded queries use run over REAL PNG / BMP / WAV payloads with the
     real decoders plugged in — and a malformed payload takes the
     ValueError drop path instead of killing the Arrow batch."""
     import io
@@ -287,6 +303,7 @@ def test_arrow_stage_runs_real_codecs_end_to_end(spark):
 
     from mapreducecf_spark.multimodal import (
         audio_features,
+        bmp24_bytes,
         decode_audio,
         decode_image,
         image_features,
@@ -317,34 +334,8 @@ def test_arrow_stage_runs_real_codecs_end_to_end(spark):
         w.writeframes(np.array([16384, -16384] * 8, dtype="<i2").tobytes())
     wav = buf.getvalue()
 
-    # 2x2 solid-color GIF: palette index 0 everywhere, clear-spam LZW
-    # (CLEAR before each pixel code keeps the stream trivially legal)
-    pal = bytes((10, 20, 30)) + bytes(3)  # 2-entry table, padded
-    bits = []
-    for _ in range(4):
-        bits += [(4, 3), (0, 3)]  # CLEAR(=1<<2), pixel 0 @ width 3
-    bits.append((5, 3))  # END
-    acc = n = 0
-    lzw = bytearray()
-    for c, wd in bits:
-        acc |= c << n
-        n += wd
-        while n >= 8:
-            lzw.append(acc & 0xFF)
-            acc >>= 8
-            n -= 8
-    if n:
-        lzw.append(acc & 0xFF)
-    gif = (
-        b"GIF89a"
-        + struct.pack("<HHBBB", 2, 2, 0x80, 0, 0)
-        + pal
-        + struct.pack("<BHHHHB", 0x2C, 0, 0, 2, 2, 0)
-        + b"\x02"
-        + bytes([len(lzw)])
-        + bytes(lzw)
-        + b"\x00\x3b"
-    )
+    # 2x2 solid-color 24-bit BMP (bottom-up, BGR, padded rows)
+    bmp = bmp24_bytes(np.full((2, 2, 3), (10, 20, 30), dtype=np.uint8))
 
     media = spark.createDataFrame(
         [
@@ -352,7 +343,7 @@ def test_arrow_stage_runs_real_codecs_end_to_end(spark):
             (2, "image", bytearray(b"\x89PNG\r\n\x1a\nbroken")),  # drop path
             (3, "audio", bytearray(wav)),
             (4, "audio", bytearray(b"RIFF\x00\x00\x00\x00WAVE")),  # drop path
-            (5, "image", bytearray(gif)),
+            (5, "image", bytearray(bmp)),
         ],
         "media_id bigint, kind string, payload binary",
     )
@@ -474,784 +465,15 @@ def test_audio_segments_invariants(spark, sf_dir):
     assert any(r["n_active"] < VAD_NFRAMES for r in rows)
 
 
-def test_decode_gif_lzw_roundtrip(spark):
-    """GIF decode is REAL: build GIFs from scratch with an in-test LZW
-    compressor (variable width, dictionary growth, width bumps) and
-    require exact pixel recovery — plus the interlaced row order, the
-    degenerate clear-code-spam stream, extension-block skipping
-    (animated-style GCE), and the truncation error path."""
-    import struct
-
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    def lzw_encode(indices, min_code):
-        clear, end = 1 << min_code, (1 << min_code) + 1
-        next_code, width = end + 1, min_code + 1
-        dic = {bytes([i]): i for i in range(1 << min_code)}
-        bits = [(clear, width)]
-        buf = b""
-        for p in indices:
-            nb = buf + bytes([p])
-            if nb in dic:
-                buf = nb
-                continue
-            bits.append((dic[buf], width))
-            dic[nb] = next_code
-            next_code += 1
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            buf = bytes([p])
-        if buf:
-            bits.append((dic[buf], width))
-        bits.append((end, width))
-        acc = n = 0
-        out = bytearray()
-        for c, wd in bits:
-            acc |= c << n
-            n += wd
-            while n >= 8:
-                out.append(acc & 0xFF)
-                acc >>= 8
-                n -= 8
-        if n:
-            out.append(acc & 0xFF)
-        return bytes(out)
-
-    def build_gif(idx, pal, min_code, interlace=False, gce=False, stream=None):
-        h, w = idx.shape
-        rows = idx
-        if interlace:
-            order = np.concatenate(
-                [np.arange(0, h, 8), np.arange(4, h, 8),
-                 np.arange(2, h, 4), np.arange(1, h, 2)]
-            )
-            rows = idx[order]  # pass-ordered storage
-        data = stream if stream is not None else lzw_encode(
-            rows.reshape(-1).tolist(), min_code
-        )
-        gct_bits = max(1, (len(pal) - 1).bit_length()) - 1
-        out = bytearray(b"GIF89a")
-        out += struct.pack("<HHBBB", w, h, 0x80 | gct_bits, 0, 0)
-        padded = np.zeros(((2 << gct_bits), 3), np.uint8)
-        padded[: len(pal)] = pal
-        out += padded.tobytes()
-        if gce:  # graphic control extension, as an animated GIF carries
-            out += b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-        out += struct.pack(
-            "<BHHHHB", 0x2C, 0, 0, w, h, 0x40 if interlace else 0
-        )
-        out += bytes([min_code])
-        for i in range(0, len(data), 255):
-            chunk = data[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00\x3b"
-        return bytes(out)
-
-    rng = np.random.RandomState(7)
-    pal = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    idx = rng.randint(0, 16, (11, 13)).astype(np.uint8)
-
-    plain = decode_image(build_gif(idx, pal, 4))
-    assert plain.shape == (11, 13, 3)
-    assert (plain == pal[idx]).all()
-
-    inter = decode_image(build_gif(idx, pal, 4, interlace=True, gce=True))
-    assert (inter == pal[idx]).all()
-
-    # degenerate but legal stream: CLEAR before every pixel code
-    min_code = 4
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    width = min_code + 1
-    bits = []
-    for p in idx.reshape(-1).tolist():
-        bits += [(clear, width), (p, width)]
-    bits.append((end, width))
-    acc = n = 0
-    raw = bytearray()
-    for c, wd in bits:
-        acc |= c << n
-        n += wd
-        while n >= 8:
-            raw.append(acc & 0xFF)
-            acc >>= 8
-            n -= 8
-    if n:
-        raw.append(acc & 0xFF)
-    spam = decode_image(build_gif(idx, pal, 4, stream=bytes(raw)))
-    assert (spam == pal[idx]).all()
-
-    # a 2-color image exercises the min_code=2 floor + width growth
-    idx2 = (np.indices((9, 17)).sum(axis=0) % 2).astype(np.uint8)
-    pal2 = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
-    two = decode_image(build_gif(idx2, pal2, 2))
-    assert (two == pal2[idx2]).all()
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        decode_image(build_gif(idx, pal, 4)[:40])
-
-
-# zigzag order + Annex-K Huffman specs, shared by the baseline and
-# progressive in-test encoders
-_JPEG_ZZ = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-_JPEG_DC_SPEC = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0], list(range(12)))
-_JPEG_AC_COUNTS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_JPEG_AC_SYMS = [
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-        0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-        0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-        0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-        0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-        0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-        0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-        0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-        0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-        0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-    0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-# progressive AC table: Annex-K baseline tables lack the EOBn symbols
-# ((r<<4)|0 for r>=1) that progressive end-of-band runs need, so build
-# a flat all-length-8 canonical table holding every symbol a
-# progressive AC scan can emit (EOB0..EOB14, ZRL, (run,size) size<=10)
-_PROG_AC_SYMS = [r << 4 for r in range(15)] + [0xF0] + [
-    (r << 4) | s for r in range(16) for s in range(1, 11)
-]
-_PROG_AC_SPEC = (
-    [0, 0, 0, 0, 0, 0, 0, len(_PROG_AC_SYMS), 0, 0, 0, 0, 0, 0, 0, 0],
-    _PROG_AC_SYMS,
-)
-
-
-def _jpeg_build_codes(counts, syms):
-    codes, code, idx = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            codes[syms[idx]] = (length, code)
-            code += 1
-            idx += 1
-        code <<= 1
-    return codes
-
-
-class _JpegBitWriter:
-    """Big-endian bit accumulator with 1-padding + 0xFF byte stuffing."""
-
-    def __init__(self, out):
-        self.out = out
-        self.bits = []
-
-    def put(self, length, code):
-        for i in range(length - 1, -1, -1):
-            self.bits.append((code >> i) & 1)
-
-    def put_val(self, v, t):
-        if t:
-            self.put(t, v if v >= 0 else v + (1 << t) - 1)
-
-    def flush(self):
-        while len(self.bits) % 8:
-            self.bits.append(1)  # pad with 1s per spec
-        for i in range(0, len(self.bits), 8):
-            byte = 0
-            for b in self.bits[i : i + 8]:
-                byte = (byte << 1) | b
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-        self.bits.clear()
-
-
-def _jpeg_coefficients(img, q_luma, q_chroma, subsample):
-    """Color-transform + (optional 4:2:0) + pad + FDCT + quantize once;
-    both encoders emit from the same zigzag coefficient arrays, so a
-    progressive re-encode decodes BYTE-IDENTICAL to the baseline one.
-    Returns (h, w, [(cid, hf, vf, tq, q, coefz[by,bx,64])], hmax, vmax,
-    mcus_x, mcus_y)."""
-    import numpy as np
-
-    zz = np.array(_JPEG_ZZ)
-    k = np.arange(8)
-    C = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) * np.sqrt(0.25)
-    C[0] *= np.sqrt(0.5)
-
-    h, w = img.shape[:2]
-    rgb = img.astype(np.float64)
-    y = 0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    cb = -0.168736 * rgb[..., 0] - 0.331264 * rgb[..., 1] + 0.5 * rgb[..., 2] + 128
-    cr = 0.5 * rgb[..., 0] - 0.418688 * rgb[..., 1] - 0.081312 * rgb[..., 2] + 128
-
-    if subsample:  # 4:2:0 — average 2x2 after padding to even dims
-        def down(p):
-            ph = np.pad(p, ((0, p.shape[0] % 2), (0, p.shape[1] % 2)), mode="edge")
-            return (ph[0::2, 0::2] + ph[0::2, 1::2] + ph[1::2, 0::2] + ph[1::2, 1::2]) / 4.0
-        planes = [(1, y, 2, 2, 0, q_luma), (2, down(cb), 1, 1, 1, q_chroma), (3, down(cr), 1, 1, 1, q_chroma)]
-        hmax = vmax = 2
-    else:
-        planes = [(1, y, 1, 1, 0, q_luma), (2, cb, 1, 1, 1, q_chroma), (3, cr, 1, 1, 1, q_chroma)]
-        hmax = vmax = 1
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-
-    comps = []
-    for cid, p, hf, vf, tq, q in planes:
-        th, tw = mcus_y * vf * 8, mcus_x * hf * 8
-        pp = np.pad(p, ((0, th - p.shape[0]), (0, tw - p.shape[1])), mode="edge")
-        by_n, bx_n = th // 8, tw // 8
-        cz = np.zeros((by_n, bx_n, 64), np.int64)
-        for by in range(by_n):
-            for bx in range(bx_n):
-                blk = pp[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                f = C @ (blk - 128.0) @ C.T
-                cz[by, bx] = np.rint(f.reshape(64)[zz] / q).astype(np.int64)
-        comps.append((cid, hf, vf, tq, q, cz))
-    return h, w, comps, hmax, vmax, mcus_x, mcus_y
-
-
-def _jpeg_encode(img, q_luma=None, q_chroma=None, subsample=False, restart=0):
-    """Minimal in-test baseline JPEG ENCODER (the round-trip witness
-    for _decode_jpeg, like the in-test LZW compressor for GIF):
-    FDCT + quantize + Annex-K-style Huffman tables built from fixed
-    count/symbol specs, 4:4:4 or 4:2:0, optional DRI/RSTn emission."""
-    import struct
-
-    import numpy as np
-
-    if q_luma is None:
-        q_luma = np.ones(64, np.int32)
-    if q_chroma is None:
-        q_chroma = q_luma
-    h, w, comps, hmax, vmax, mcus_x, mcus_y = _jpeg_coefficients(
-        img, q_luma, q_chroma, subsample
-    )
-    dc_codes = _jpeg_build_codes(*_JPEG_DC_SPEC)
-    ac_codes = _jpeg_build_codes(_JPEG_AC_COUNTS, _JPEG_AC_SYMS)
-
-    out = bytearray(b"\xff\xd8")
-    for tq, q in ((0, q_luma), (1, q_chroma)):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tq) + bytes(int(x) for x in q)
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 8 + 3 * 3, 8, h, w, 3)
-    for cid, hf, vf, tq, _q, _cz in comps:
-        out += bytes([cid, (hf << 4) | vf, tq])
-    for tc_th, (counts, syms) in (
-        (0x00, _JPEG_DC_SPEC), (0x10, (_JPEG_AC_COUNTS, _JPEG_AC_SYMS)),  # class<<4 | id
-        (0x01, _JPEG_DC_SPEC), (0x11, (_JPEG_AC_COUNTS, _JPEG_AC_SYMS)),
-    ):
-        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(syms), tc_th)
-        out += bytes(counts) + bytes(syms)
-    if restart:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * 3, 3)
-    for cid, *_ in comps:
-        out += bytes([cid, 0x00 if cid == 1 else 0x11])
-    out += b"\x00\x3f\x00"
-
-    wtr = _JpegBitWriter(out)
-
-    def cat_of(v):
-        return 0 if v == 0 else int(abs(v)).bit_length()
-
-    def encode_block(qc, pred):
-        dc, diff = int(qc[0]), int(qc[0]) - pred
-        t = cat_of(diff)
-        wtr.put(*dc_codes[t])
-        wtr.put_val(diff, t)
-        run = 0
-        last_nz = max([i for i in range(1, 64) if qc[i]], default=0)
-        for i in range(1, last_nz + 1):
-            v = int(qc[i])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                wtr.put(*ac_codes[0xF0])
-                run -= 16
-            t = cat_of(v)
-            wtr.put(*ac_codes[(run << 4) | t])
-            wtr.put_val(v, t)
-            run = 0
-        if last_nz < 63:
-            wtr.put(*ac_codes[0x00])
-        return dc
-
-    preds = {cid: 0 for cid, *_ in comps}
-    mcu_index = 0
-    rst = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart and mcu_index and mcu_index % restart == 0:
-                wtr.flush()
-                out += bytes([0xFF, 0xD0 + (rst & 7)])
-                rst += 1
-                preds = {cid: 0 for cid, *_ in comps}
-            for cid, hf, vf, tq, q, cz in comps:
-                for by in range(vf):
-                    for bx in range(hf):
-                        preds[cid] = encode_block(
-                            cz[my * vf + by, mx * hf + bx], preds[cid]
-                        )
-            mcu_index += 1
-    wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _jpeg_encode_progressive(img, q_luma=None, q_chroma=None, subsample=False,
-                             restart=0, spectral_only=False):
-    """Minimal in-test PROGRESSIVE JPEG encoder (SOF2) — the round-trip
-    witness for _decode_jpeg_progressive. Same FDCT + quantize plan as
-    the baseline encoder, then a libjpeg-style scan script: DC first
-    with point transform, spectral-band AC first scans with EOBn
-    end-of-band run coding, then successive-approximation refinement
-    scans (sign bit per newly-nonzero coefficient; buffered correction
-    bits for history coefficients, split libjpeg-style into the
-    current block's buffer and the pending EOB run's buffer).
-    ``spectral_only=True`` emits the Al=0 spectral-selection-only
-    script instead. AC scans use the flat _PROG_AC_SPEC table because
-    Annex-K baseline tables lack EOBn symbols."""
-    import struct
-
-    import numpy as np
-
-    if q_luma is None:
-        q_luma = np.ones(64, np.int32)
-    if q_chroma is None:
-        q_chroma = q_luma
-    h, w, comps, hmax, vmax, mcus_x, mcus_y = _jpeg_coefficients(
-        img, q_luma, q_chroma, subsample
-    )
-    dc_codes = _jpeg_build_codes(*_JPEG_DC_SPEC)
-    pac_codes = _jpeg_build_codes(*_PROG_AC_SPEC)
-
-    out = bytearray(b"\xff\xd8")
-    for tq, q in ((0, q_luma), (1, q_chroma)):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tq) + bytes(int(x) for x in q)
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * 3, 8, h, w, 3)
-    for cid, hf, vf, tq, _q, _cz in comps:
-        out += bytes([cid, (hf << 4) | vf, tq])
-    for tc_th, (counts, syms) in ((0x00, _JPEG_DC_SPEC), (0x12, _PROG_AC_SPEC)):
-        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(syms), tc_th)
-        out += bytes(counts) + bytes(syms)
-    if restart:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart)
-
-    # non-interleaved block grids (T.81 A.2.2: ceil over the
-    # component's OWN sample dims, not the MCU-padded grid)
-    grids = {}
-    for cid, hf, vf, _tq, _q, _cz in comps:
-        bw = -(-(w * hf) // hmax)
-        bh = -(-(h * vf) // vmax)
-        grids[cid] = (-(-bh // 8), -(-bw // 8))
-
-    def sos_header(scomps, ss, se, ah, al):
-        hdr = bytearray(b"\xff\xda")
-        hdr += struct.pack(">HB", 6 + 2 * len(scomps), len(scomps))
-        for cid, td, ta in scomps:
-            hdr += bytes([cid, (td << 4) | ta])
-        hdr += bytes([ss, se, (ah << 4) | al])
-        return hdr
-
-    def emit_dc_scan(ah, al):
-        out.extend(sos_header([(cid, 0, 0) for cid, *_ in comps], 0, 0, ah, al))
-        wtr = _JpegBitWriter(out)
-        preds = {cid: 0 for cid, *_ in comps}
-        idx = rstn = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart and idx and idx % restart == 0:
-                    wtr.flush()
-                    out.extend(bytes([0xFF, 0xD0 + (rstn & 7)]))
-                    rstn += 1
-                    preds = {cid: 0 for cid, *_ in comps}
-                for cid, hf, vf, _tq, _q, cz in comps:
-                    for by in range(vf):
-                        for bx in range(hf):
-                            dc = int(cz[my * vf + by, mx * hf + bx, 0])
-                            if ah == 0:
-                                v = dc >> al  # arithmetic shift, like libjpeg
-                                diff = v - preds[cid]
-                                preds[cid] = v
-                                t = 0 if diff == 0 else abs(diff).bit_length()
-                                wtr.put(*dc_codes[t])
-                                wtr.put_val(diff, t)
-                            else:
-                                wtr.put(1, (dc >> al) & 1)
-                idx += 1
-        wtr.flush()
-
-    def emit_ac_first(ci, ss, se, al):
-        cid, _hf, _vf, _tq, _q, cz = comps[ci]
-        out.extend(sos_header([(cid, 0, 2)], ss, se, 0, al))
-        wtr = _JpegBitWriter(out)
-        eob = [0]
-
-        def flush_eob():
-            if eob[0]:
-                r = eob[0].bit_length() - 1
-                wtr.put(*pac_codes[r << 4])
-                if r:
-                    wtr.put(r, eob[0] - (1 << r))
-                eob[0] = 0
-
-        by_n, bx_n = grids[cid]
-        idx = rstn = 0
-        for by in range(by_n):
-            for bx in range(bx_n):
-                if restart and idx and idx % restart == 0:
-                    flush_eob()
-                    wtr.flush()
-                    out.extend(bytes([0xFF, 0xD0 + (rstn & 7)]))
-                    rstn += 1
-                blk = cz[by, bx]
-                r = 0
-                for k in range(ss, se + 1):
-                    v = int(blk[k])
-                    t = abs(v) >> al
-                    if t == 0:
-                        r += 1
-                        continue
-                    flush_eob()
-                    while r > 15:
-                        wtr.put(*pac_codes[0xF0])
-                        r -= 16
-                    s = t.bit_length()
-                    wtr.put(*pac_codes[(r << 4) | s])
-                    wtr.put_val(t if v > 0 else -t, s)
-                    r = 0
-                if r > 0:
-                    eob[0] += 1
-                    if eob[0] == 0x7FFF:
-                        flush_eob()
-                idx += 1
-        flush_eob()
-        wtr.flush()
-
-    def emit_ac_refine(ci, ss, se, ah, al):
-        cid, _hf, _vf, _tq, _q, cz = comps[ci]
-        out.extend(sos_header([(cid, 0, 2)], ss, se, ah, al))
-        wtr = _JpegBitWriter(out)
-        eob = [0]
-        run_corr = []  # correction bits owned by the pending EOB run
-        blk_corr = []  # correction bits of the current block so far
-
-        def flush_eob():
-            if eob[0]:
-                r = eob[0].bit_length() - 1
-                wtr.put(*pac_codes[r << 4])
-                if r:
-                    wtr.put(r, eob[0] - (1 << r))
-                for b in run_corr:
-                    wtr.put(1, b)
-                run_corr.clear()
-                eob[0] = 0
-
-        def emit_blk_corr():
-            for b in blk_corr:
-                wtr.put(1, b)
-            blk_corr.clear()
-
-        by_n, bx_n = grids[cid]
-        idx = rstn = 0
-        for by in range(by_n):
-            for bx in range(bx_n):
-                if restart and idx and idx % restart == 0:
-                    flush_eob()
-                    wtr.flush()
-                    out.extend(bytes([0xFF, 0xD0 + (rstn & 7)]))
-                    rstn += 1
-                blk = cz[by, bx]
-                absv = [abs(int(blk[k])) >> al for k in range(ss, se + 1)]
-                eobpos = -1  # band-local index of last NEWLY-nonzero coef
-                for j, t in enumerate(absv):
-                    if t == 1:
-                        eobpos = j
-                r = 0
-                for j, t in enumerate(absv):
-                    if t == 0:
-                        r += 1
-                        continue
-                    # ZRLs not foldable into the EOB run (libjpeg order:
-                    # before the history-correction append below)
-                    while r > 15 and j <= eobpos:
-                        flush_eob()
-                        wtr.put(*pac_codes[0xF0])
-                        r -= 16
-                        emit_blk_corr()
-                    if t > 1:  # history coef: buffer its correction bit
-                        blk_corr.append(t & 1)
-                        continue
-                    flush_eob()
-                    wtr.put(*pac_codes[(r << 4) | 1])
-                    wtr.put(1, 1 if int(blk[ss + j]) > 0 else 0)
-                    emit_blk_corr()
-                    r = 0
-                if r > 0 or blk_corr:
-                    eob[0] += 1
-                    run_corr.extend(blk_corr)
-                    blk_corr.clear()
-                    if eob[0] == 0x7FFF:
-                        flush_eob()
-                idx += 1
-        flush_eob()
-        wtr.flush()
-
-    if spectral_only:
-        emit_dc_scan(0, 0)
-        for ci in range(len(comps)):
-            emit_ac_first(ci, 1, 63, 0)
-    else:
-        emit_dc_scan(0, 1)
-        emit_ac_first(0, 1, 5, 2)
-        emit_ac_first(0, 6, 63, 2)
-        emit_ac_first(1, 1, 63, 1)
-        emit_ac_first(2, 1, 63, 1)
-        emit_ac_refine(0, 1, 63, 2, 1)
-        emit_dc_scan(1, 0)
-        emit_ac_refine(0, 1, 63, 1, 0)
-        emit_ac_refine(1, 1, 63, 1, 0)
-        emit_ac_refine(2, 1, 63, 1, 0)
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def test_decode_jpeg_baseline_roundtrip():
-    """JPEG decode is REAL: encode from scratch with an in-test
-    baseline encoder (standard Huffman tables) and require near-exact
-    recovery at unit quantization — 4:4:4, non-multiple-of-8 dims,
-    4:2:0 subsampling, restart intervals, and the error paths."""
-    import numpy as np
-    import pytest
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.RandomState(11)
-    # smooth image (DCT-friendly): low-freq gradient + mild noise
-    yy, xx = np.mgrid[0:24, 0:21]
-    base = np.stack(
-        [40 + 3 * xx + 2 * yy, 90 + 2 * xx, 150 + yy], axis=2
-    ).astype(np.float64)
-    img = np.clip(base + rng.randint(-2, 3, base.shape), 0, 255).astype(np.uint8)
-
-    got = decode_image(_jpeg_encode(img))
-    assert got.shape == img.shape
-    # unit qtables: error budget is color-transform + DCT rounding only
-    assert np.abs(got.astype(int) - img.astype(int)).max() <= 4
-
-    solid = np.full((16, 16, 3), 128, np.uint8)
-    assert np.abs(
-        decode_image(_jpeg_encode(solid)).astype(int) - 128
-    ).max() <= 1
-
-    sub = decode_image(_jpeg_encode(img, subsample=True))
-    assert sub.shape == img.shape
-    # chroma is 2x2-averaged: luma-dominated tolerance
-    assert np.abs(sub.astype(int) - img.astype(int)).mean() < 6
-
-    rst = decode_image(_jpeg_encode(img, restart=2))
-    assert (rst == got).all(), "restart-interval stream must decode identically"
-
-    # T.81 B.1.1.2: optional 0xFF fill bytes may precede any header
-    # marker — pad before SOF0 and DQT and require identical decode
-    # (ADVICE r14: these spec-legal streams used to raise desync)
-    padded = _jpeg_encode(img)
-    for mk in (b"\xff\xc0", b"\xff\xdb"):
-        at = padded.find(mk)
-        padded = padded[:at] + b"\xff\xff\xff" + padded[at:]
-    assert (decode_image(padded) == got).all(), (
-        "fill-byte-padded stream must decode identically"
-    )
-
-    q = np.ones(64, np.int32) * 8
-    lossy = decode_image(_jpeg_encode(img, q_luma=q, q_chroma=q))
-    assert np.abs(lossy.astype(int) - img.astype(int)).max() <= 40
-
-    with pytest.raises(ValueError):
-        decode_image(_jpeg_encode(img)[:40])  # truncated header
-    with pytest.raises(ValueError):
-        decode_image(_jpeg_encode(img)[:-30])  # truncated entropy stream
-    arith = bytearray(_jpeg_encode(img))
-    sof = arith.find(b"\xff\xc0")
-    arith[sof + 1] = 0xC9  # flip SOF0 -> SOF9 (arithmetic sequential)
-    with pytest.raises(NotImplementedError):
-        decode_image(bytes(arith))
-    prog = bytearray(_jpeg_encode(img))
-    sof = prog.find(b"\xff\xc0")
-    prog[sof + 1] = 0xC2  # SOF2 with a baseline Ss=0,Se=63 scan is
-    with pytest.raises(ValueError):  # an INVALID progressive stream
-        decode_image(bytes(prog))
-
-
-def test_mm_image_features_consumes_planted_jpeg(spark):
-    """The graded Arrow stage itself (image_features/mapInPandas) must
-    ingest a baseline JPEG payload end to end: plant JPEG bytes in a
-    media DataFrame, run the stage with the REAL codec, and check the
-    per-channel means against the planted image."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image, image_features
-
-    img = np.zeros((16, 16, 3), np.uint8)
-    img[..., 0], img[..., 1], img[..., 2] = 200, 100, 50
-    payload = _jpeg_encode(img)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload)), (2, "image", None)],
-        "media_id bigint, kind string, payload binary",
-    )
-    rows = image_features(media, decode=decode_image).collect()
-    assert len(rows) == 1  # NULL payload dropped by the stage
-    r = rows[0]
-    assert r["media_id"] == 1 and r["n_bytes"] == len(payload)
-    assert abs(r["mean_r"] - 200) <= 2
-    assert abs(r["mean_g"] - 100) <= 2
-    assert abs(r["mean_b"] - 50) <= 2
-
-
-def test_decode_jpeg_property_sweep():
-    """Seeded-random property sweep over the JPEG round-trip: sizes
-    spanning the MCU edge cases (exact multiples, off-by-one, single
-    block), random smooth content, random restart intervals and
-    subsampling — at unit quantization recovery stays within the
-    DCT-rounding budget for every case."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.RandomState(20260815)
-    sizes = [(8, 8), (9, 10), (16, 24), (17, 8), (8, 17), (25, 31), (32, 16)]
-    for h, w in sizes:
-        yy, xx = np.mgrid[0:h, 0:w]
-        a, b, c = rng.randint(1, 4, 3)
-        base = np.stack(
-            [30 + a * xx + b * yy, 80 + c * xx, 140 + a * yy], axis=2
-        ).astype(np.float64)
-        img = np.clip(base + rng.randint(-2, 3, base.shape), 0, 255).astype(np.uint8)
-        sub = bool(rng.randint(0, 2))
-        restart = int(rng.choice([0, 1, 3]))
-        got = decode_image(_jpeg_encode(img, subsample=sub, restart=restart))
-        assert got.shape == img.shape, (h, w, sub, restart)
-        err = np.abs(got.astype(int) - img.astype(int))
-        budget = 14 if sub else 4  # chroma averaging vs pure DCT rounding
-        assert err.max() <= budget, (h, w, sub, restart, int(err.max()))
-
-
-def test_decode_jpeg_progressive_roundtrip():
-    """Progressive JPEG decode is REAL: encode the SAME quantized
-    coefficients with the in-test progressive encoder (spectral
-    selection + successive approximation, libjpeg-style scan script)
-    and require a BYTE-IDENTICAL decode to the baseline stream —
-    both encoders share _jpeg_coefficients and the decoders share the
-    per-block IDCT expression, so any scan-accumulation bug shows as
-    a pixel diff."""
-    import numpy as np
-    import pytest
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.RandomState(11)
-    yy, xx = np.mgrid[0:24, 0:21]
-    base = np.stack(
-        [40 + 3 * xx + 2 * yy, 90 + 2 * xx, 150 + yy], axis=2
-    ).astype(np.float64)
-    img = np.clip(base + rng.randint(-2, 3, base.shape), 0, 255).astype(np.uint8)
-
-    got = decode_image(_jpeg_encode(img))  # baseline witness
-
-    prog = decode_image(_jpeg_encode_progressive(img))
-    assert prog.shape == img.shape
-    assert (prog == got).all(), "successive-approximation decode must equal baseline"
-
-    spec = decode_image(_jpeg_encode_progressive(img, spectral_only=True))
-    assert (spec == got).all(), "spectral-selection-only decode must equal baseline"
-
-    rst = decode_image(_jpeg_encode_progressive(img, restart=2))
-    assert (rst == got).all(), "restart markers inside progressive scans"
-
-    sub_base = decode_image(_jpeg_encode(img, subsample=True))
-    sub_prog = decode_image(_jpeg_encode_progressive(img, subsample=True))
-    assert (sub_prog == sub_base).all(), "4:2:0 progressive must equal 4:2:0 baseline"
-
-    q = np.ones(64, np.int32) * 8
-    lossy_base = decode_image(_jpeg_encode(img, q_luma=q, q_chroma=q))
-    lossy_prog = decode_image(_jpeg_encode_progressive(img, q_luma=q, q_chroma=q))
-    assert (lossy_prog == lossy_base).all(), "coarse-quant progressive parity"
-
-    with pytest.raises(ValueError):
-        decode_image(_jpeg_encode_progressive(img)[:-20])  # truncated last scan
-    with pytest.raises(ValueError):
-        decode_image(_jpeg_encode_progressive(img)[:40])  # truncated header
-
-
-def test_decode_jpeg_progressive_property_sweep():
-    """Seeded-random property sweep over progressive/baseline decode
-    parity: MCU edge-case sizes, random subsampling/restart, both scan
-    scripts, and high-detail noise content (dense AC coefficients push
-    the EOBn/ZRL/correction-bit paths) — every stream must decode
-    byte-identical to its baseline twin."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.RandomState(20260816)
-    sizes = [(8, 8), (9, 10), (16, 24), (17, 8), (25, 31), (32, 16)]
-    for h, w in sizes:
-        # full-range noise: near-uniform coefficient occupancy, so the
-        # refinement scans exercise long runs AND dense corrections
-        img = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-        sub = bool(rng.randint(0, 2))
-        restart = int(rng.choice([0, 1, 3]))
-        spec = bool(rng.randint(0, 2))
-        base = decode_image(_jpeg_encode(img, subsample=sub))
-        prog = decode_image(
-            _jpeg_encode_progressive(
-                img, subsample=sub, restart=restart, spectral_only=spec
-            )
-        )
-        assert prog.shape == base.shape, (h, w, sub, restart, spec)
-        assert (prog == base).all(), (h, w, sub, restart, spec)
-
-
-def test_mm_image_features_consumes_planted_progressive_jpeg(spark):
-    """The graded Arrow stage must ingest a PROGRESSIVE JPEG payload
-    end to end (same contract as the baseline planting test)."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image, image_features
-
-    img = np.zeros((16, 16, 3), np.uint8)
-    img[..., 0], img[..., 1], img[..., 2] = 200, 100, 50
-    payload = _jpeg_encode_progressive(img)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload)), (2, "image", None)],
-        "media_id bigint, kind string, payload binary",
-    )
-    rows = image_features(media, decode=decode_image).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["media_id"] == 1 and r["n_bytes"] == len(payload)
-    assert abs(r["mean_r"] - 200) <= 2
-    assert abs(r["mean_g"] - 100) <= 2
-    assert abs(r["mean_b"] - 50) <= 2
-
-
 def test_image_histogram_matches_local_recompute_and_real_codec(spark, sf_dir):
     """The histogram's bins must equal a local numpy recompute over the
     same fake decodes (shares reconcile per channel), and the SAME
     Arrow stage shape works on REAL codec output: a planted solid-color
-    JPEG decodes into a single bin."""
+    BMP decodes into a single bin."""
     import numpy as np
 
     from mapreducecf_spark.multimodal import (
+        bmp24_bytes,
         decode_image,
         fake_decode_rgb,
         media_table,
@@ -1277,9 +499,9 @@ def test_image_histogram_matches_local_recompute_and_real_codec(spark, sf_dir):
         tot = sum(v for (c, _), v in got.items() if c == ch)
         shares = [r["share_micro"] for r in rows if r["channel"] == ch]
         assert abs(sum(shares) - 1_000_000) <= len(shares)  # half-up per bin
-    # real-codec path: a mid-grey JPEG lands every pixel in bin 2
+    # real-codec path: a mid-grey BMP lands every pixel in bin 2
     solid = np.full((16, 16, 3), 130, np.uint8)
-    img = decode_image(_jpeg_encode(solid))
+    img = decode_image(bmp24_bytes(solid))
     assert set(np.unique(img >> 6)) == {2}
 
 
@@ -1314,1489 +536,29 @@ def test_audio_fp_catches_every_planted_reencode(spark, sf_dir):
     assert all(h <= 2 for h in found.values())
 
 
-def _ima_encode(samples, n_ch, samples_per_block):
-    """Minimal in-test IMA ADPCM encoder (WAVE format 0x11) — the
-    round-trip witness: canonical nibble quantization, reconstruction
-    tracked through the SAME _ima_step the decoder uses. Returns
-    (payload, reconstruction int16 array shaped like the decoder's
-    output in samples)."""
-    import struct
-
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import _ima_step, _IMA_STEP
-
-    x = np.asarray(samples, dtype=np.int64).reshape(-1, n_ch)
-    n_frames = x.shape[0]
-    assert n_frames % samples_per_block == 0
-    nib_per_block = samples_per_block - 1
-    assert nib_per_block % 8 == 0
-    block_align = 4 * n_ch + nib_per_block // 2 * n_ch
-    data = b""
-    recon = np.zeros_like(x)
-    idxs = [0] * n_ch
-    fi = 0
-    for _ in range(n_frames // samples_per_block):
-        hdr = b""
-        preds = []
-        for c in range(n_ch):
-            p = int(x[fi, c])
-            preds.append(p)
-            recon[fi, c] = p
-            hdr += struct.pack("<hBB", p, idxs[c], 0)
-        data += hdr
-        nibbles = [[] for _ in range(n_ch)]
-        for k in range(1, samples_per_block):
-            for c in range(n_ch):
-                step = _IMA_STEP[idxs[c]]
-                delta = int(x[fi + k, c]) - preds[c]
-                code = 8 if delta < 0 else 0
-                delta = abs(delta)
-                if delta >= step:
-                    code |= 4
-                    delta -= step
-                if delta >= step >> 1:
-                    code |= 2
-                    delta -= step >> 1
-                if delta >= step >> 2:
-                    code |= 1
-                preds[c], idxs[c] = _ima_step(preds[c], idxs[c], code)
-                recon[fi + k, c] = preds[c]
-                nibbles[c].append(code)
-        # 4-byte groups per channel, round-robin; low nibble first
-        packed = b""
-        for g in range(0, nib_per_block, 8):
-            for c in range(n_ch):
-                by = bytearray()
-                for j in range(0, 8, 2):
-                    by.append(nibbles[c][g + j] | (nibbles[c][g + j + 1] << 4))
-                packed += bytes(by)
-        data += packed
-        fi += samples_per_block
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x11, n_ch, 8000, 8000 * block_align // samples_per_block,
-        block_align, 4, 2, samples_per_block,
-    )
-    payload = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return payload, recon
-
-
-def test_decode_ima_adpcm_roundtrip():
-    """IMA ADPCM (WAVE format 0x11): the decoder must reproduce the
-    in-test encoder's tracked reconstruction BIT-EXACTLY (the spec
-    identity — both sides step the same quantizer), mono and stereo,
-    across blocks; a final block truncated mid-data decodes exactly
-    the nibbles it contains (ADVICE r15 — common encoder output), a
-    block truncated INSIDE its per-channel headers still raises
-    ValueError, and PCM WAVs still take the stdlib path untouched."""
-    import numpy as np
-    import pytest as _pytest
-
-    from mapreducecf_spark.multimodal import decode_audio
-
-    rng = np.random.default_rng(7)
-    # mono, 2 blocks of 9 samples (8 nibbles each)
-    mono = rng.integers(-30000, 30000, size=18, dtype=np.int64)
-    payload, recon = _ima_encode(mono, 1, 9)
-    got = decode_audio(payload)
-    assert got.dtype == np.float32 and got.shape == (18,)
-    assert np.array_equal(got, recon.reshape(-1).astype(np.float32) / 32768.0)
-
-    # stereo, interleaved channel groups
-    st = rng.integers(-32768, 32767, size=(17 * 2 * 2,), dtype=np.int64)
-    payload2, recon2 = _ima_encode(st, 2, 17)
-    got2 = decode_audio(payload2)
-    assert got2.shape == (34, 2)
-    assert np.array_equal(got2, recon2.astype(np.float32) / 32768.0)
-
-    # final block truncated mid-data (block 2 keeps its 4-byte header
-    # + 1 data byte = 2 nibbles): decode exactly samples 0..11
-    got3 = decode_audio(payload[:-3])
-    assert got3.shape == (12,)
-    assert np.array_equal(
-        got3, recon.reshape(-1)[:12].astype(np.float32) / 32768.0
-    )
-    # truncation INSIDE the per-channel header block is still malformed
-    with _pytest.raises(ValueError):
-        decode_audio(payload[:-6])  # final block = 2 bytes < 4-byte header
-
-    # MULTICHANNEL final block cut mid-group (tail past the 8-byte
-    # headers not a multiple of 4*n_ch) would decode unequal
-    # per-channel counts — must be the truncated-chunk ValueError,
-    # not numpy's inhomogeneous-shape error (ADVICE r16)
-    with _pytest.raises(ValueError):
-        decode_audio(payload2[:-3])
-    # ... while a cut at a whole interleave-group boundary decodes
-    # the groups present: final block keeps headers + one 8-byte
-    # group (4 bytes/ch = 8 nibbles/ch), so 17 + 1 + 8 = 26 frames
-    got4 = decode_audio(payload2[:-8])
-    assert got4.shape == (26, 2)
-    assert np.array_equal(got4, recon2[:26].astype(np.float32) / 32768.0)
-
-
-def test_decode_ima_adpcm_fact_trim():
-    """A `fact` chunk's sample-frame count trims the padded final
-    block's tail (ADVICE r15): a 14-frame stream encoded into 2
-    padded 9-sample blocks decodes to exactly 14 frames, mono and
-    stereo; a fact count >= the decoded length is a no-op."""
-    import struct
-
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_audio
-
-    def with_fact(payload: bytes, n_frames: int) -> bytes:
-        fact = b"fact" + struct.pack("<II", 4, n_frames)
-        # splice fact before the data chunk; fix the RIFF size
-        di = payload.index(b"data")
-        out = payload[:di] + fact + payload[di:]
-        return out[:4] + struct.pack("<I", len(out) - 8) + out[8:]
-
-    rng = np.random.default_rng(11)
-    mono = rng.integers(-30000, 30000, size=18, dtype=np.int64)
-    payload, recon = _ima_encode(mono, 1, 9)
-    got = decode_audio(with_fact(payload, 14))
-    assert got.shape == (14,)
-    assert np.array_equal(got, recon.reshape(-1)[:14].astype(np.float32) / 32768.0)
-    # fact >= decoded length: no trim
-    assert decode_audio(with_fact(payload, 18)).shape == (18,)
-    assert decode_audio(with_fact(payload, 99)).shape == (18,)
-
-    st = rng.integers(-32768, 32767, size=(17 * 2 * 2,), dtype=np.int64)
-    payload2, recon2 = _ima_encode(st, 2, 17)
-    got2 = decode_audio(with_fact(payload2, 30))
-    assert got2.shape == (30, 2)
-    assert np.array_equal(got2, recon2[:30].astype(np.float32) / 32768.0)
-
-
-# ---------------------------------------------------------------------
-# WebP lossless (VP8L) decode — r16
-# ---------------------------------------------------------------------
-def _libwebp():
-    """ctypes handle to the system libwebp reference codec, or None —
-    the PURE-SPEC tests below run without it; the exhaustive sweeps
-    use it as the encode+decode oracle."""
-    import ctypes
-
-    try:
-        lib = ctypes.CDLL("libwebp.so.7")
-    except OSError:
-        return None
-    lib.WebPEncodeLosslessRGBA.restype = ctypes.c_size_t
-    lib.WebPDecodeRGBA.restype = ctypes.POINTER(ctypes.c_uint8)
-    return lib
-
-
-def _webp_enc(lib, img):
-    import ctypes
-
-    h, w = img.shape[:2]
-    out = ctypes.POINTER(ctypes.c_uint8)()
-    n = lib.WebPEncodeLosslessRGBA(img.tobytes(), w, h, w * 4, ctypes.byref(out))
-    assert n, "libwebp encode failed"
-    p = ctypes.string_at(out, n)
-    lib.WebPFree(out)
-    return p
-
-
-def _webp_dec_ref(lib, payload):
-    import ctypes
-
-    import numpy as np
-
-    w, h = ctypes.c_int(), ctypes.c_int()
-    p = lib.WebPDecodeRGBA(payload, len(payload), ctypes.byref(w), ctypes.byref(h))
-    a = np.ctypeslib.as_array(p, shape=(h.value, w.value, 4)).copy()
-    lib.WebPFree(p)
-    return a
-
-
-#: fixed libwebp-encoded payloads (deterministic constructions below) —
-#: the no-dependency regression pins
-_WEBP_GRAD_HEX = (
-    "524946463a000000574542505650384c2e0000002f13c00300098048da1f7b8988"
-    "fea7160041f8df3611d1ff14840484eeff67519c03850002a0a0890900bcd4ab00"
-)
-_WEBP_PAL_HEX = (
-    "5249464644000000574542505650384c370000002f0bc002001f2010202a24aa17"
-    "614348400cf0ff93452a810091e24d8973f31f7f404903826c1ba2914c7724a73a"
-    "4244ff8b00a8dbaadf00"
-)
-
-
-def test_decode_webp_lossless_fixed_payloads():
-    """Two pinned real VP8L payloads decode pixel-exactly to their
-    deterministic source images WITHOUT any codec library — a
-    gradient (predictor-transform path) and a 4-color palette
-    (color-indexing + pixel-bundling path)."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    h, w = 16, 20
-    yy, xx = np.mgrid[0:h, 0:w]
-    grad = np.zeros((h, w, 3), np.uint8)
-    grad[..., 0] = (xx * 7) % 256
-    grad[..., 1] = (yy * 11) % 256
-    grad[..., 2] = ((xx + yy) * 3) % 256
-    got = decode_image(bytes.fromhex(_WEBP_GRAD_HEX))
-    assert got.dtype == np.uint8 and np.array_equal(got, grad)
-
-    pal = np.array(
-        [[10, 20, 30], [200, 100, 0], [0, 255, 128], [255, 255, 255]], np.uint8
-    )
-    idx = np.add.outer(np.arange(12), np.arange(12)) % 4
-    assert np.array_equal(decode_image(bytes.fromhex(_WEBP_PAL_HEX)), pal[idx])
-
-
-def test_decode_webp_errors():
-    """Container/bitstream error contract: malformed lossy VP8 and
-    malformed VP8L both raise ValueError (r17 — lossy VP8 decodes
-    natively now, so garbage is a malformed payload, not a missing
-    codec)."""
-    import struct
-
-    import pytest as _pytest
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    lossy = b"RIFF" + struct.pack("<I", 16) + b"WEBP" + b"VP8 " + struct.pack("<I", 4) + b"\x00" * 4
-    with _pytest.raises(ValueError):
-        decode_image(lossy)
-    bad = b"RIFF" + struct.pack("<I", 16) + b"WEBP" + b"VP8L" + struct.pack("<I", 4) + b"\xff" * 4
-    with _pytest.raises(ValueError):
-        decode_image(bad)
-    # a TRUNCATED VP8L bitstream (valid container, chunk cut short)
-    # must also be ValueError, not the bit reader's IndexError
-    # escaping the image_features drop path (ADVICE r16)
-    with _pytest.raises(ValueError):
-        decode_image(bytes.fromhex(_WEBP_GRAD_HEX)[:-8])
-
-
-def test_decode_webp_lossless_vs_libwebp_structured():
-    """Structured sweep against the libwebp reference codec: noise
-    (incl. 1-pixel-wide/tall extremes), gradients (predictor modes),
-    tiled textures (LZ77), palettes at every bundling width, a large
-    mixed image (meta-Huffman), and smooth photo-like noise (color
-    transform) — every decode must be pixel-exact."""
-    import numpy as np
-    import pytest as _pytest
-
-    lib = _libwebp()
-    if lib is None:
-        _pytest.skip("libwebp not available")
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.default_rng(7)
-    cases = []
-    for (h, w) in [(1, 1), (1, 17), (23, 1), (5, 5), (16, 16), (33, 47), (64, 64)]:
-        img = rng.integers(0, 256, (h, w, 4), np.uint8)
-        img[..., 3] = 255
-        cases.append(img)
-    for s in range(3):
-        h, w = 40 + s * 13, 50 + s * 7
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = np.zeros((h, w, 4), np.uint8)
-        img[..., 3] = 255
-        img[..., 0] = (xx * 3 + s) % 256
-        img[..., 1] = (yy * 2) % 256
-        img[..., 2] = ((xx + yy) * 5) % 256
-        cases.append(img)
-    for s in range(4):
-        ph, pw = int(rng.integers(1, 9)), int(rng.integers(1, 9))
-        patch = rng.integers(0, 256, (ph, pw, 4), np.uint8)
-        patch[..., 3] = 255
-        img = np.tile(
-            patch, (int(np.ceil(60 / ph)), int(np.ceil(70 / pw)), 1)
-        )[:60, :70]
-        cases.append(np.ascontiguousarray(img))
-    for ps in (2, 3, 4, 7, 16, 17, 64, 250):
-        pal = rng.integers(0, 256, (ps, 3), np.uint8)
-        idx = rng.integers(0, ps, (31, 37))
-        img = np.zeros((31, 37, 4), np.uint8)
-        img[..., 3] = 255
-        img[..., :3] = pal[idx]
-        cases.append(img)
-    big = np.zeros((120, 200, 4), np.uint8)
-    big[..., 3] = 255
-    big[:60, :100, :3] = rng.integers(0, 256, (60, 100, 3))
-    yy, xx = np.mgrid[0:120, 0:200]
-    big[60:, :, 0] = (xx[60:] * 2) % 256
-    big[:, 100:, 1] = (yy[:, 100:] * 3) % 256
-    cases.append(big)
-    for s in range(2):
-        h, w = 64, 96
-        base = rng.integers(0, 256, (h // 8, w // 8, 3)).astype(np.float64)
-        up = np.kron(base, np.ones((8, 8, 1)))
-        img = np.zeros((h, w, 4), np.uint8)
-        img[..., 3] = 255
-        img[..., :3] = np.clip(up + rng.normal(0, 6, (h, w, 3)), 0, 255).astype(
-            np.uint8
-        )
-        cases.append(img)
-    for img in cases:
-        payload = _webp_enc(lib, img)
-        ref = _webp_dec_ref(lib, payload)[..., :3]
-        assert np.array_equal(decode_image(payload), ref)
-
-
-def test_decode_webp_lossless_dist2d_full_coverage():
-    """The 120-entry 2D distance-code table, exercised END TO END:
-    shifted-copy constructions for EVERY (dx, dy) in the spec
-    neighborhood force the encoder into the corresponding 2D codes;
-    pixel-exact decode across the grid plus a coverage assertion that
-    a super-majority of the 120 codes actually fired (the table can't
-    silently be wrong where it matters)."""
-    import numpy as np
-    import pytest as _pytest
-
-    lib = _libwebp()
-    if lib is None:
-        _pytest.skip("libwebp not available")
-    import mapreducecf_spark.multimodal as mm
-
-    seen = set()
-    rng = np.random.default_rng(42)
-    # spy on the table lookup itself: every 2D code the pixel loop
-    # resolves is recorded
-    table = mm._VP8L_DIST2D
-
-    class SpyTable:
-        def __getitem__(self, i):
-            seen.add(i + 1)
-            return table[i]
-
-    mm._VP8L_DIST2D = SpyTable()
-    try:
-        for dy in range(0, 8):
-            for dx in range(-7, 9):
-                if dy == 0 and dx <= 0:
-                    continue
-                h, w = 24, 30
-                img = np.zeros((h, w, 4), np.uint8)
-                img[..., 3] = 255
-                for y in range(h):
-                    for x in range(w):
-                        sy, sx = y - dy, x - dx
-                        if (
-                            (sy > 0 or (sy == 0 and sx >= 0))
-                            and (sy < y or (sy == y and sx < x))
-                            and 0 <= sx < w
-                            and sy >= 0
-                        ):
-                            img[y, x] = img[sy, sx]
-                        else:
-                            img[y, x, :3] = rng.integers(0, 256, 3)
-                payload = _webp_enc(lib, img)
-                ref = _webp_dec_ref(lib, payload)[..., :3]
-                assert np.array_equal(mm.decode_image(payload), ref), (dx, dy)
-    finally:
-        mm._VP8L_DIST2D = table
-    assert len(seen) >= 90, f"only {len(seen)}/120 2D codes exercised"
-
-
-def test_decode_webp_lossless_alpha_fuzz():
-    """Randomized fuzz with NON-TRIVIAL alpha (the A-tree path) and
-    mixed content kinds vs the libwebp reference — RGB must match
-    exactly (alpha decodes through the pipeline, then drops per the
-    decode_image contract)."""
-    import numpy as np
-    import pytest as _pytest
-
-    lib = _libwebp()
-    if lib is None:
-        _pytest.skip("libwebp not available")
-    from mapreducecf_spark.multimodal import decode_image
-
-    for seed in range(24):
-        rng = np.random.default_rng(1000 + seed)
-        kind = seed % 4
-        h, w = int(rng.integers(1, 70)), int(rng.integers(1, 70))
-        if kind == 0:
-            img = rng.integers(0, 256, (h, w, 4), np.uint8)
-        elif kind == 1:
-            yy, xx = np.mgrid[0:h, 0:w]
-            img = np.zeros((h, w, 4), np.uint8)
-            img[..., 0] = (xx * int(rng.integers(1, 9))) % 256
-            img[..., 1] = (yy * 3) % 256
-            img[..., 2] = ((xx ^ yy) * 2) % 256
-            img[..., 3] = np.minimum(255, 32 + yy * 2).astype(np.uint8)
-        elif kind == 2:
-            ph, pw = int(rng.integers(1, 7)), int(rng.integers(1, 7))
-            patch = rng.integers(0, 256, (ph, pw, 4), np.uint8)
-            img = np.ascontiguousarray(
-                np.tile(patch, (int(np.ceil(h / ph)), int(np.ceil(w / pw)), 1))[
-                    :h, :w
-                ]
-            )
-        else:
-            pal = rng.integers(0, 256, (int(rng.integers(2, 30)), 4), np.uint8)
-            img = pal[rng.integers(0, len(pal), (h, w))]
-        payload = _webp_enc(lib, np.ascontiguousarray(img))
-        ref = _webp_dec_ref(lib, payload)[..., :3]
-        assert np.array_equal(decode_image(payload), ref), seed
-
-
-def test_mm_image_features_consumes_planted_webp(spark):
-    """The graded Arrow stage (image_features/mapInPandas) must ingest
-    a WEBP LOSSLESS payload end to end with the REAL codec: the pinned
-    VP8L gradient payload's per-channel means must match the
-    deterministic source image EXACTLY (lossless, no DCT budget)."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image, image_features
-
-    payload = bytes.fromhex(_WEBP_GRAD_HEX)
-    h, w = 16, 20
-    yy, xx = np.mgrid[0:h, 0:w]
-    grad = np.zeros((h, w, 3), np.uint8)
-    grad[..., 0] = (xx * 7) % 256
-    grad[..., 1] = (yy * 11) % 256
-    grad[..., 2] = ((xx + yy) * 3) % 256
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload)), (2, "image", None)],
-        "media_id bigint, kind string, payload binary",
-    )
-    rows = image_features(media, decode=decode_image).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["media_id"] == 1 and r["n_bytes"] == len(payload)
-    assert abs(r["mean_r"] - float(grad[..., 0].mean())) < 1e-6
-    assert abs(r["mean_g"] - float(grad[..., 1].mean())) < 1e-6
-    assert abs(r["mean_b"] - float(grad[..., 2].mean())) < 1e-6
-
-
-# ---------------------------------------------------------------------
-# WebP lossy (VP8 intra) decode — r17
-# ---------------------------------------------------------------------
-#: deterministic 20x24 gradient encoded with libwebp -q75 (simple API);
-#: the YUV md5s are libwebp's own WebPDecodeYUV output for this payload
-_WEBP_VP8_HEX = "52494646fe0000005745425056503820f20000009007009d012a140018003e7d309247a4a321a137e800900f896c009d32847037a370e63a7c0030a674caf9e5fd8f9a73267f4ece39133aa534e291ace3484ecd8a8637b80000fefd1f7a14a8b8691f984b816dcbf0991b49566bac68b60366a17af8e4023c4dd4c3ed7399f1ff0d04d49637196a5e62bca4dde6c72453f6a7b5b78c8fea6d4e0ebfcb9ec279ffc708b724cce8d17c01cf5079caf51fb208d1d06334cac3357a4ecc52241dc941f9ffeae62936e2cad81366d646abf178255bdcddad2a1169d0805d73ea0158d6eef139d79f4e989fc5469e804b92aeffe3fdf57b123fff04eb3a119f13fcd62ac4b8df4000"
-
-
-def _vp8_chunk(payload: bytes) -> bytes:
-    import struct
-
-    pos = 12
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", payload, pos + 4)
-        if cid == b"VP8 ":
-            return payload[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    raise AssertionError("no VP8 chunk")
-
-
-def test_decode_vp8_pinned_payload():
-    """A pinned real lossy-WebP payload decodes WITHOUT any codec
-    library to libwebp's exact YUV planes (md5-pinned), and
-    decode_image returns the HxWx3 uint8 RGB contract through the
-    container walk."""
-    import hashlib
-
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-    from mapreducecf_spark.vp8 import decode_vp8
-
-    payload = bytes.fromhex(_WEBP_VP8_HEX)
-    y, u, v = decode_vp8(_vp8_chunk(payload))
-    assert y.shape == (24, 20) and u.shape == (12, 10) and v.shape == (12, 10)
-    assert hashlib.md5(y.tobytes()).hexdigest() == "cb55cee9c43f819dc75216cdbca7a06d"
-    assert hashlib.md5(u.tobytes()).hexdigest() == "84ff809d0a116f5c21d71259a04f399d"
-    assert hashlib.md5(v.tobytes()).hexdigest() == "0539454f0e984db206f8476d4df03a5d"
-    assert y[0, :4].tolist() == [15, 18, 23, 26]
-
-    rgb = decode_image(payload)
-    assert rgb.dtype == np.uint8 and rgb.shape == (24, 20, 3)
-
-
-def test_decode_vp8_errors():
-    """Bitstream error contract: an interframe (non-key) tag and a
-    truncated keyframe both raise ValueError."""
-    import pytest as _pytest
-
-    from mapreducecf_spark.vp8 import decode_vp8
-
-    chunk = _vp8_chunk(bytes.fromhex(_WEBP_VP8_HEX))
-    with _pytest.raises(ValueError):
-        decode_vp8(bytes([chunk[0] | 1]) + chunk[1:])  # interframe bit
-    with _pytest.raises(ValueError):
-        decode_vp8(chunk[:9])  # shorter than the fixed header
-    with _pytest.raises(ValueError):
-        decode_vp8(chunk[:40])  # truncated partitions
-
-
-def _libwebp_lossy():
-    """ctypes handles for libwebp's lossy encoder + YUV decoder, or
-    None — the sweep tests below are skipped without the library; the
-    pinned-payload test covers the no-library path."""
-    import ctypes
-
-    try:
-        lib = ctypes.CDLL("libwebp.so.7")
-    except OSError:
-        return None
-    lib.WebPEncodeRGB.restype = ctypes.c_size_t
-    lib.WebPEncodeRGB.argtypes = [
-        ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
-        ctypes.c_float, ctypes.POINTER(ctypes.c_void_p),
-    ]
-    lib.WebPDecodeYUV.restype = ctypes.POINTER(ctypes.c_uint8)
-    lib.WebPDecodeYUV.argtypes = [
-        ctypes.c_char_p, ctypes.c_size_t,
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-        ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
-        ctypes.POINTER(ctypes.POINTER(ctypes.c_uint8)),
-        ctypes.POINTER(ctypes.c_int), ctypes.POINTER(ctypes.c_int),
-    ]
-    return lib
-
-
-def _lossy_encode(lib, img, q):
-    import ctypes
-
-    h, w, _ = img.shape
-    out = ctypes.c_void_p()
-    n = lib.WebPEncodeRGB(img.tobytes(), w, h, w * 3, float(q), ctypes.byref(out))
-    assert n > 0
-    payload = ctypes.string_at(out.value, n)
-    return payload
-
-
-def _lossy_ref_yuv(lib, payload):
-    import ctypes
-
-    import numpy as np
-
-    W = ctypes.c_int()
-    H = ctypes.c_int()
-    u = ctypes.POINTER(ctypes.c_uint8)()
-    v = ctypes.POINTER(ctypes.c_uint8)()
-    stride = ctypes.c_int()
-    uvs = ctypes.c_int()
-    yp = lib.WebPDecodeYUV(
-        payload, len(payload), ctypes.byref(W), ctypes.byref(H),
-        ctypes.byref(u), ctypes.byref(v), ctypes.byref(stride), ctypes.byref(uvs),
-    )
-    w, h = W.value, H.value
-    cw, ch = (w + 1) // 2, (h + 1) // 2
-    y = np.ctypeslib.as_array(yp, shape=(h, stride.value))[:, :w].copy()
-    uu = np.ctypeslib.as_array(u, shape=(ch, uvs.value))[:, :cw].copy()
-    vv = np.ctypeslib.as_array(v, shape=(ch, uvs.value))[:, :cw].copy()
-    return y, uu, vv
-
-
-def test_decode_vp8_vs_libwebp_sweep():
-    """Against the libwebp reference codec (skipped if absent): the
-    decoder must be BIT-EXACT on the YUV planes across content types
-    (flat / gradient / photo-like / noise), sizes incl. odd and
-    partial-MB dims, and the full quality range (0..100 — exercising
-    i16/i4 modes, skip MBs, segmentation with quantizer+filter
-    deltas, loop-filter levels up to 63, and hev thresholds)."""
-    import numpy as np
-    import pytest as _pytest
-
-    lib = _libwebp_lossy()
-    if lib is None:
-        _pytest.skip("libwebp not available")
-
-    from mapreducecf_spark.vp8 import decode_vp8
-
-    rng = np.random.default_rng(42)
-
-    def gradient(h, w):
-        yy, xx = np.mgrid[0:h, 0:w]
-        img = np.zeros((h, w, 3), np.uint8)
-        img[..., 0] = xx * 255 // max(w - 1, 1)
-        img[..., 1] = yy * 255 // max(h - 1, 1)
-        img[..., 2] = ((xx + yy) * 3) % 256
-        return img
-
-    def photo(h, w, seed):
-        r = np.random.default_rng(seed)
-        base = r.integers(0, 256, (h // 8 + 2, w // 8 + 2, 3)).astype(np.float64)
-        img = np.zeros((h, w, 3))
-        for c in range(3):
-            img[..., c] = np.kron(base[..., c], np.ones((8, 8)))[:h, :w]
-        img += r.normal(0, 6, img.shape)
-        return np.clip(img, 0, 255).astype(np.uint8)
-
-    cases = [
-        (np.full((16, 16, 3), 77, np.uint8), "flat16"),
-        (gradient(33, 17), "grad33x17"),
-        (photo(64, 80, 7), "photo64x80"),
-        (photo(29, 61, 9), "photo29x61"),
-        (rng.integers(0, 256, (40, 40, 3), dtype=np.uint8), "noise40"),
-        (gradient(7, 5), "tiny7x5"),
-    ]
-    for img, tag in cases:
-        for q in (0, 5, 50, 75, 95, 100):
-            payload = _lossy_encode(lib, img, q)
-            ry, ru, rv = _lossy_ref_yuv(lib, payload)
-            my, mu, mv = decode_vp8(_vp8_chunk(payload))
-            for pn, a, b in (("Y", ry, my), ("U", ru, mu), ("V", rv, mv)):
-                assert np.array_equal(a, b), f"{tag}-q{q} plane {pn}"
-
-
-def test_mm_image_features_consumes_planted_lossy_webp(spark):
-    """The graded Arrow stage must also ingest a LOSSY WebP (VP8)
-    payload end to end with the real decoder: the pinned payload's
-    per-channel means must equal the local decode_image means exactly
-    (the stage adds no arithmetic of its own)."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image, image_features
-
-    payload = bytes.fromhex(_WEBP_VP8_HEX)
-    local = decode_image(payload)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload))],
-        "media_id bigint, kind string, payload binary",
-    )
-    rows = image_features(media, decode=decode_image).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["n_bytes"] == len(payload)
-    assert abs(r["mean_r"] - float(local[..., 0].mean())) < 1e-6
-    assert abs(r["mean_g"] - float(local[..., 1].mean())) < 1e-6
-    assert abs(r["mean_b"] - float(local[..., 2].mean())) < 1e-6
-
-
-def test_decode_webp_animation_first_frame():
-    """An ANIMATED WebP (VP8X + ANIM + ANMF frames) decodes its FIRST
-    frame — the GIF-first-frame contract: wrap the pinned VP8 payload
-    as frame 1 of a two-frame animation and expect the same pixels as
-    the plain container."""
-    import struct
-
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    plain = bytes.fromhex(_WEBP_VP8_HEX)
-    rgb_plain = decode_image(plain)
-    vp8 = _vp8_chunk(plain)
-
-    def chunk(cid, body):
-        pad = b"\x00" if len(body) & 1 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    w, h = 20, 24
-    vp8x = chunk(b"VP8X", bytes([0x02, 0, 0, 0]) + struct.pack("<I", w - 1)[:3] + struct.pack("<I", h - 1)[:3])
-    anim = chunk(b"ANIM", struct.pack("<IH", 0xFFFFFFFF, 0))
-    frame_meta = (
-        struct.pack("<I", 0)[:3] + struct.pack("<I", 0)[:3]
-        + struct.pack("<I", w - 1)[:3] + struct.pack("<I", h - 1)[:3]
-        + struct.pack("<I", 40)[:3] + bytes([0])
-    )
-    anmf1 = chunk(b"ANMF", frame_meta + chunk(b"VP8 ", vp8))
-    anmf2 = chunk(b"ANMF", frame_meta + chunk(b"VP8 ", vp8[:0]))  # never reached
-    body = b"WEBP" + vp8x + anim + anmf1 + anmf2
-    animated = b"RIFF" + struct.pack("<I", len(body)) + body
-    assert np.array_equal(decode_image(animated), rgb_plain)
-
-
-# ---------------------------------------------------------------------
-# TIFF decode — r17
-# ---------------------------------------------------------------------
-def _tiff_encode(img, byte_order="<", compression=1, rows_per_strip=None,
-                 photometric=None, predictor=1, palette=None, tile=None,
-                 bits=8):
-    """Minimal in-test TIFF 6.0 writer — the round-trip witness for
-    the pure-Python decoder: strips, none/LZW(early-change)/PackBits,
-    optional Predictor 2, grey/RGB/palette, both byte orders."""
-    import struct
-
-    import numpy as np
-
-    h, w = img.shape[:2]
-    spp = 1 if img.ndim == 2 else img.shape[2]
-    rps = rows_per_strip or h
-    if photometric is None:
-        photometric = 2 if spp == 3 else 1
-
-    def lzw(data: bytes) -> bytes:
-        out = bytearray()
-        bits = 0
-        nbits = 0
-
-        def emit(code, width):
-            nonlocal bits, nbits
-            bits = (bits << width) | code
-            nbits += width
-            while nbits >= 8:
-                out.append((bits >> (nbits - 8)) & 0xFF)
-                nbits -= 8
-
-        table = {bytes([i]): i for i in range(256)}
-        nxt = 258
-        width = 9
-        emit(256, width)
-        cur = b""
-        for byt in data:
-            cand = cur + bytes([byt])
-            if cand in table:
-                cur = cand
-                continue
-            emit(table[cur], width)
-            table[cand] = nxt
-            nxt += 1
-            # EARLY CHANGE: the decoder widens one code early
-            if nxt + 1 > (1 << width) and width < 12:
-                width += 1
-            cur = bytes([byt])
-            if nxt == 4094:  # stay clear of the 12-bit ceiling
-                emit(table[cur], width)
-                emit(256, width)
-                table = {bytes([i]): i for i in range(256)}
-                nxt = 258
-                width = 9
-                cur = b""
-        if cur:
-            emit(table[cur], width)
-        emit(257, width)
-        if nbits:
-            out.append((bits << (8 - nbits)) & 0xFF)
-        return bytes(out)
-
-    def packbits(data: bytes) -> bytes:
-        out = bytearray()
-        i = 0
-        while i < len(data):
-            run = 1
-            while i + run < len(data) and run < 128 and data[i + run] == data[i]:
-                run += 1
-            if run >= 2:
-                out += bytes([257 - run, data[i]])
-                i += run
-            else:
-                j = i + 1
-                while (
-                    j < len(data)
-                    and j - i < 128
-                    and not (j + 1 < len(data) and data[j] == data[j + 1])
-                ):
-                    j += 1
-                out += bytes([j - i - 1]) + data[i:j]
-                i = j
-        return bytes(out)
-
-    sdt = np.dtype(byte_order + ("u1" if bits == 8 else "u2"))
-    px = np.asarray(img, dtype=sdt.newbyteorder("=")).reshape(h, w, spp)
-
-    def pack(rows):
-        if predictor == 2:
-            rows = rows.astype(np.int64)
-            mod = 256 if bits == 8 else 65536
-            rows = np.concatenate(
-                [rows[:, :1], (rows[:, 1:] - rows[:, :-1]) % mod], axis=1
-            )
-        data = rows.astype(sdt).tobytes()
-        if compression == 5:
-            data = lzw(data)
-        elif compression == 32773:
-            data = packbits(data)
-        elif compression == 8:
-            import zlib as _z
-
-            data = _z.compress(data)
-        return data
-
-    strips = []
-    if tile is not None:
-        tw, tl = tile
-        for ty in range(0, h, tl):
-            for tx in range(0, w, tw):
-                block = np.zeros((tl, tw, spp), px.dtype)
-                sub = px[ty : ty + tl, tx : tx + tw]
-                block[: sub.shape[0], : sub.shape[1]] = sub
-                strips.append(pack(block))
-    else:
-        for y0 in range(0, h, rps):
-            strips.append(pack(px[y0 : y0 + rps]))
-
-    e = byte_order
-    entries = []  # (tag, type, count, packed-value-bytes or offset marker)
-    extra = bytearray()
-    header_end = 8
-    n_tags_est = (11 if tile is None else 12) + (1 if palette is not None else 0)
-    ifd_off = header_end
-    data_off = ifd_off + 2 + 12 * n_tags_est + 4
-
-    def field(tag, typ, vals):
-        size = {3: 2, 4: 4}[typ]
-        fmt = {3: "H", 4: "I"}[typ]
-        raw = b"".join(struct.pack(e + fmt, v) for v in vals)
-        nonlocal extra
-        if len(raw) <= 4:
-            return (tag, typ, len(vals), raw.ljust(4, b"\x00"))
-        off = data_off + len(extra)
-        extra.extend(raw)
-        return (tag, typ, len(vals), struct.pack(e + "I", off))
-
-    # strip payloads go after the extra-values block (offsets fixed later)
-    strip_lens = [len(s) for s in strips]
-    entries.append(field(256, 3, [w]))
-    entries.append(field(257, 3, [h]))
-    entries.append(field(258, 3, [bits] * spp))
-    entries.append(field(259, 3, [compression]))
-    entries.append(field(262, 3, [photometric]))
-    strip_off_entry = len(entries)
-    if tile is None:
-        entries.append(field(273, 4, [0] * len(strips)))  # patched below
-        entries.append(field(278, 3, [rps]))
-        entries.append(field(279, 4, strip_lens))
-    else:
-        entries.append(field(324, 4, [0] * len(strips)))  # patched below
-        entries.append(field(322, 3, [tile[0]]))
-        entries.append(field(323, 3, [tile[1]]))
-        entries.append(field(325, 4, strip_lens))
-    entries.append(field(277, 3, [spp]))
-    entries.append(field(284, 3, [1]))
-    entries.append(field(317, 3, [predictor]))
-    if palette is not None:
-        cmap = []
-        for ch in range(3):
-            cmap.extend(int(v) << 8 for v in palette[:, ch])
-        entries.append(field(320, 3, cmap))
-    strips_base = data_off + len(extra)
-    offs = []
-    run = strips_base
-    for ln in strip_lens:
-        offs.append(run)
-        run += ln
-    off_tag = 273 if tile is None else 324
-    raw = b"".join(struct.pack(e + "I", v) for v in offs)
-    if len(raw) <= 4:
-        entries[strip_off_entry] = (off_tag, 4, len(offs), raw.ljust(4, b"\x00"))
-    else:
-        off = data_off + len(extra)
-        extra.extend(raw)
-        entries[strip_off_entry] = (off_tag, 4, len(offs), struct.pack(e + "I", off))
-        strips_base = data_off + len(extra)
-        offs2 = []
-        run = strips_base
-        for ln in strip_lens:
-            offs2.append(run)
-            run += ln
-        extra[-len(raw):] = b"".join(struct.pack(e + "I", v) for v in offs2)
-
-    entries.sort(key=lambda x: x[0])
-    assert len(entries) == n_tags_est
-    out = bytearray()
-    out += (b"II*\x00" if e == "<" else b"MM\x00*")
-    out += struct.pack(e + "I", ifd_off)
-    out += struct.pack(e + "H", len(entries))
-    for tag, typ, cnt, packed in entries:
-        out += struct.pack(e + "HHI", tag, typ, cnt) + packed
-    out += struct.pack(e + "I", 0)  # next IFD
-    assert len(out) == data_off
-    out += extra
-    for s in strips:
-        out += s
-    return bytes(out)
-
-
-def test_decode_tiff_roundtrips():
-    """Baseline TIFF across the support matrix: both byte orders ×
-    {none, LZW+predictor, LZW, PackBits} × {RGB multi-strip, grey,
-    WhiteIsZero grey, palette} round-trip EXACTLY through the in-test
-    writer (LZW exercises the early-change width bump with >256-entry
-    tables)."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.default_rng(5)
-    rgb = rng.integers(0, 256, (37, 23, 3), dtype=np.uint8)
-    grey = rng.integers(0, 256, (21, 40), dtype=np.uint8)
-    grey3 = np.repeat(grey[..., None], 3, axis=2)
-
-    for bo in ("<", ">"):
-        for comp in (1, 5, 32773):
-            got = decode_image(_tiff_encode(rgb, bo, comp, rows_per_strip=10))
-            assert np.array_equal(got, rgb), (bo, comp, "rgb")
-            got = decode_image(_tiff_encode(grey, bo, comp))
-            assert np.array_equal(got, grey3), (bo, comp, "grey")
-    # LZW + horizontal-differencing predictor (the libtiff default combo)
-    got = decode_image(_tiff_encode(rgb, "<", 5, rows_per_strip=8, predictor=2))
-    assert np.array_equal(got, rgb)
-    # a low-entropy image big enough to push the LZW table past 511
-    # entries (both width bumps on the early-change schedule)
-    yy, xx = np.mgrid[0:64, 0:96]
-    smooth = ((xx // 6 + yy // 7) % 11 * 23).astype(np.uint8)
-    got = decode_image(_tiff_encode(smooth, ">", 5))
-    assert np.array_equal(got, np.repeat(smooth[..., None], 3, axis=2))
-    # WhiteIsZero inverts
-    got = decode_image(_tiff_encode(grey, "<", 1, photometric=0))
-    assert np.array_equal(got, 255 - grey3)
-    # palette
-    pal = rng.integers(0, 256, (256, 3), dtype=np.uint8)
-    idx = rng.integers(0, 256, (19, 31), dtype=np.uint8)
-    got = decode_image(_tiff_encode(idx, "<", 32773, photometric=3, palette=pal))
-    assert np.array_equal(got, pal[idx])
-
-
-def test_decode_tiff_errors():
-    """Unsupported/malformed TIFF structure raises ValueError (the
-    drop path): 16-bit depth, tiled-ish missing strips, truncated
-    strips, unknown compression."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.default_rng(6)
-    img = rng.integers(0, 256, (9, 9, 3), dtype=np.uint8)
-    good = _tiff_encode(img)
-    with _pytest.raises(ValueError):
-        decode_image(good[:40])  # truncated tag table
-    # corrupt the compression tag to an unknown scheme
-    bad = bytearray(good)
-    pos = bad.find(struct.pack("<HH", 259, 3))
-    bad[pos + 8 : pos + 10] = struct.pack("<H", 7)  # JPEG-in-TIFF
-    with _pytest.raises(ValueError):
-        decode_image(bytes(bad))
-    # truncated strip payload
-    with _pytest.raises(ValueError):
-        decode_image(good[:-10])
-
-
-def test_decode_g711_roundtrip():
-    """G.711 A-law/mu-law WAV decode vs the canonical reference
-    compander (Sun's public g711.c linear2ulaw/linear2alaw,
-    reimplemented in-test): decode(encode(x)) reproduces the
-    reference expansion EXACTLY for every representable input, mono
-    and stereo, and the known anchor bytes decode right (mu-law 0xFF
-    -> 0, A-law 0xD5 -> +8)."""
-    import struct
-
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_audio
-
-    def seg(v, table):
-        for i, t in enumerate(table):
-            if v <= t:
-                return i
-        return len(table)
-
-    useg = [0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF, 0x3FFF, 0x7FFF]
-    aseg = [0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF, 0x1FFF, 0x3FFF, 0x7FFF]
-
-    def linear2ulaw(pcm):  # Sun g711.c
-        BIAS = 0x84
-        mask = 0x7F if pcm < 0 else 0xFF
-        if pcm < 0:
-            pcm = -pcm
-        if pcm > 32635:
-            pcm = 32635
-        pcm += BIAS
-        s = seg(pcm, useg)
-        uval = (s << 4) | ((pcm >> (s + 3)) & 0xF)
-        return uval ^ mask
-
-    def linear2alaw(pcm):  # Sun g711.c
-        mask = 0xD5 if pcm >= 0 else 0x55
-        if pcm < 0:
-            pcm = -pcm - 1
-        if pcm > 32767:
-            pcm = 32767
-        s = seg(pcm, aseg)
-        if s >= 8:
-            return 0x7F ^ mask
-        aval = s << 4
-        aval |= (pcm >> 4) & 0xF if s < 2 else (pcm >> (s + 3)) & 0xF
-        return aval ^ mask
-
-    def ulaw2linear(u):
-        u = ~u & 0xFF
-        t = (((u & 0xF) << 3) + 0x84) << ((u & 0x70) >> 4)
-        return (0x84 - t) if (u & 0x80) else (t - 0x84)
-
-    def alaw2linear(a):
-        a ^= 0x55
-        t = (a & 0xF) << 4
-        s = (a & 0x70) >> 4
-        if s == 0:
-            t += 8
-        elif s == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (s - 1)
-        return t if (a & 0x80) else -t
-
-    def wav(tag, data, n_ch=1):
-        fmt = struct.pack("<HHIIHH", tag, n_ch, 8000, 8000 * n_ch, n_ch, 8)
-        return (
-            b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-
-    allb = bytes(range(256))
-    got_u = decode_audio(wav(0x07, allb))
-    want_u = np.array([ulaw2linear(b) for b in allb], np.float32) / 32768.0
-    assert np.array_equal(got_u, want_u)
-    got_a = decode_audio(wav(0x06, allb))
-    want_a = np.array([alaw2linear(b) for b in allb], np.float32) / 32768.0
-    assert np.array_equal(got_a, want_a)
-    # anchors
-    assert ulaw2linear(0xFF) == 0 and got_u[0xFF] == 0.0
-    assert alaw2linear(0xD5) == 8 and got_a[0xD5] == 8 / 32768.0
-
-    # full compander round-trip: for every sample, decode(encode(x))
-    # equals the reference expansion of the code word
-    rng = np.random.default_rng(3)
-    pcm = rng.integers(-32768, 32767, 500, dtype=np.int64)
-    ub = bytes(linear2ulaw(int(v)) for v in pcm)
-    ab = bytes(linear2alaw(int(v)) for v in pcm)
-    assert np.array_equal(
-        decode_audio(wav(0x07, ub)),
-        np.array([ulaw2linear(b) for b in ub], np.float32) / 32768.0,
-    )
-    st = decode_audio(wav(0x06, ab[:500 // 2 * 2], n_ch=2))
-    assert st.shape == (250, 2)
-    assert np.array_equal(
-        st.reshape(-1),
-        np.array([alaw2linear(b) for b in ab[:500]], np.float32) / 32768.0,
-    )
-
-
-# ---------------------------------------------------------------------
-# FLAC decode — r17 (in-test encoder = the lossless round-trip witness)
-# ---------------------------------------------------------------------
-
-
-
-
-class _FlacBitW:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def w(self, v: int, bits: int):
-        v &= (1 << bits) - 1
-        self.acc = (self.acc << bits) | v
-        self.n += bits
-        while self.n >= 8:
-            self.buf.append((self.acc >> (self.n - 8)) & 0xFF)
-            self.n -= 8
-
-    def sw(self, v: int, bits: int):
-        self.w(v & ((1 << bits) - 1), bits)
-
-    def unary(self, q: int):
-        for _ in range(q):
-            self.w(0, 1)
-        self.w(1, 1)
-
-    def align(self):
-        if self.n:
-            self.w(0, 8 - self.n)
-
-    def bytes(self) -> bytes:
-        assert self.n == 0
-        return bytes(self.buf)
-
-
-def _flac_crc8(data: bytes) -> int:
-    c = 0
-    for b in data:
-        c ^= b
-        for _ in range(8):
-            c = ((c << 1) ^ 0x07) & 0xFF if c & 0x80 else (c << 1) & 0xFF
-    return c
-
-
-def _flac_crc16(data: bytes) -> int:
-    c = 0
-    for b in data:
-        c ^= b << 8
-        for _ in range(8):
-            c = ((c << 1) ^ 0x8005) & 0xFFFF if c & 0x8000 else (c << 1) & 0xFFFF
-    return c
-
-
-def _flac_utf8_num(n: int) -> bytes:
-    if n < 0x80:
-        return bytes([n])
-    out = []
-    nb = 1
-    while n >= (1 << (6 - nb + nb * 6)):  # crude: grow until fits
-        nb += 1
-    # standard UTF-8-style: nb continuation bytes
-    for nb in range(1, 7):
-        if n < (1 << (6 - nb + 6 * nb)):
-            break
-    lead = (0xFF << (7 - nb)) & 0xFF
-    out = [lead | (n >> (6 * nb)) & ((1 << (6 - nb)) - 1)]
-    for i in range(nb - 1, -1, -1):
-        out.append(0x80 | ((n >> (6 * i)) & 0x3F))
-    return bytes(out)
-
-
-def _flac_rice_write(bw: _FlacBitW, res: list[int], param: int, escape_raw: int | None = None,
-               method: int = 0, porder: int = 0, pred_order: int = 0, n: int = 0):
-    pbits = 4 if method == 0 else 5
-    esc = 0xF if method == 0 else 0x1F
-    bw.w(method, 2)
-    bw.w(porder, 4)
-    nparts = 1 << porder
-    idx = 0
-    for p in range(nparts):
-        cnt = n // nparts - (pred_order if p == 0 else 0)
-        if escape_raw is not None and p == nparts - 1:
-            bw.w(esc, pbits)
-            bw.w(escape_raw, 5)
-            for _ in range(cnt):
-                bw.sw(res[idx], escape_raw)
-                idx += 1
-        else:
-            bw.w(param, pbits)
-            for _ in range(cnt):
-                v = res[idx]
-                idx += 1
-                zz = (v << 1) ^ (v >> 63) if v < 0 else (v << 1)
-                zz = ((-v << 1) - 1) if v < 0 else (v << 1)
-                q, r = zz >> param, zz & ((1 << param) - 1)
-                bw.unary(q)
-                if param:
-                    bw.w(r, param)
-
-
-def _flac_sub_verbatim(bw: _FlacBitW, ch: list[int], bps: int):
-    bw.w(0, 1)
-    bw.w(1, 6)
-    bw.w(0, 1)
-    for v in ch:
-        bw.sw(v, bps)
-
-
-def _flac_sub_constant(bw: _FlacBitW, v: int, bps: int):
-    bw.w(0, 1)
-    bw.w(0, 6)
-    bw.w(0, 1)
-    bw.sw(v, bps)
-
-
-def _flac_sub_fixed(bw: _FlacBitW, ch: list[int], bps: int, order: int, param: int,
-              porder: int = 0, escape_raw: int | None = None):
-    COEF = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1]}[order]
-    bw.w(0, 1)
-    bw.w(8 + order, 6)
-    bw.w(0, 1)
-    for v in ch[:order]:
-        bw.sw(v, bps)
-    res = []
-    for i in range(order, len(ch)):
-        pred = sum(c * ch[i - 1 - j] for j, c in enumerate(COEF))
-        res.append(ch[i] - pred)
-    _flac_rice_write(bw, res, param, escape_raw=escape_raw, porder=porder,
-               pred_order=order, n=len(ch))
-
-
-def _flac_sub_lpc(bw: _FlacBitW, ch: list[int], bps: int, coefs: list[int], prec: int,
-            shift: int, param: int):
-    order = len(coefs)
-    bw.w(0, 1)
-    bw.w(32 + order - 1, 6)
-    bw.w(0, 1)
-    for v in ch[:order]:
-        bw.sw(v, bps)
-    bw.w(prec - 1, 4)
-    bw.sw(shift, 5)
-    for c in coefs:
-        bw.sw(c, prec)
-    res = []
-    for i in range(order, len(ch)):
-        acc = sum(c * ch[i - 1 - j] for j, c in enumerate(coefs))
-        res.append(ch[i] - (acc >> shift))
-    _flac_rice_write(bw, res, param, pred_order=order, n=len(ch))
-
-
-def _flac_encode(chans, bps=16, sr=8000, block=256, mode="auto", stereo="lr",
-                 frame_bps_code=0):
-    """chans: list of per-channel int lists (equal length)."""
-    n_ch = len(chans)
-    total = len(chans[0])
-    hdr = _FlacBitW()
-    hdr.w(block, 16)
-    hdr.w(block, 16)
-    hdr.w(0, 24)
-    hdr.w(0, 24)
-    hdr.w(sr, 20)
-    hdr.w(n_ch - 1, 3)
-    hdr.w(bps - 1, 5)
-    hdr.w(total, 36)
-    si = hdr.bytes() + b"\x00" * 16
-    out = bytearray(b"fLaC")
-    out += bytes([0x80]) + len(si).to_bytes(3, "big") + si
-
-    fno = 0
-    pos = 0
-    while pos < total:
-        n = min(block, total - pos)
-        bw = _FlacBitW()
-        bw.w(0x3FFE, 14)
-        bw.w(0, 1)
-        bw.w(0, 1)  # fixed blocksize strategy
-        # blocksize code: use 6 (8-bit - 1) if n<=256 else 7 (16-bit)
-        bs_code = 6 if n <= 256 else 7
-        bw.w(bs_code, 4)
-        bw.w(4, 4)  # 8000 Hz
-        if stereo == "ms" and n_ch == 2:
-            bw.w(10, 4)
-        elif stereo == "ls" and n_ch == 2:
-            bw.w(8, 4)
-        elif stereo == "rs" and n_ch == 2:
-            bw.w(9, 4)
-        else:
-            bw.w(n_ch - 1, 4)
-        bw.w(frame_bps_code, 3)  # 0 = bps from streaminfo
-        bw.w(0, 1)
-        for b in _flac_utf8_num(fno):
-            bw.w(b, 8)
-        if bs_code == 6:
-            bw.w(n - 1, 8)
-        else:
-            bw.w(n - 1, 16)
-        bw.align()
-        head = bw.bytes()
-        head += bytes([_flac_crc8(head)])
-        bw2 = _FlacBitW()
-
-        def enc_one(ch, eff_bps, flavor):
-            if flavor == "constant":
-                _flac_sub_constant(bw2, ch[0], eff_bps)
-            elif flavor == "verbatim":
-                _flac_sub_verbatim(bw2, ch, eff_bps)
-            elif flavor == "fixed2":
-                _flac_sub_fixed(bw2, ch, eff_bps, 2, 4)
-            elif flavor == "fixed3p":
-                _flac_sub_fixed(bw2, ch, eff_bps, 3, 3, porder=2)
-            elif flavor == "fixed1esc":
-                _flac_sub_fixed(bw2, ch, eff_bps, 1, 2, porder=1, escape_raw=eff_bps + 1)
-            elif flavor == "lpc":
-                _flac_sub_lpc(bw2, ch, eff_bps, [3, -1], 5, 1, 5)
-            else:
-                raise AssertionError(flavor)
-
-        blkch = [c[pos : pos + n] for c in chans]
-        if stereo in ("ms", "ls", "rs") and n_ch == 2:
-            L, R = blkch
-            if stereo == "ms":
-                mid = [(l + r) >> 1 for l, r in zip(L, R)]
-                side = [l - r for l, r in zip(L, R)]
-                enc_one(mid, bps, mode if mode != "auto" else "verbatim")
-                enc_one(side, bps + 1, "verbatim")
-            elif stereo == "ls":
-                side = [l - r for l, r in zip(L, R)]
-                enc_one(L, bps, "verbatim")
-                enc_one(side, bps + 1, "verbatim")
-            else:
-                side = [l - r for l, r in zip(L, R)]
-                enc_one(side, bps + 1, "verbatim")
-                enc_one(R, bps, "verbatim")
-        else:
-            for c in blkch:
-                if mode == "auto":
-                    flavor = "verbatim"
-                else:
-                    flavor = mode
-                if flavor == "constant" and any(v != c[0] for v in c):
-                    flavor = "verbatim"
-                enc_one(c, bps, flavor)
-        bw2.align()
-        body = bw2.bytes()
-        frame = head + body
-        frame += _flac_crc16(frame).to_bytes(2, "big")
-        out += frame
-        pos += n
-        fno += 1
-    return bytes(out)
-
-
-
-
-def test_decode_flac_roundtrips():
-    """FLAC decode across the subframe/Rice/stereo matrix: CONSTANT,
-    VERBATIM, FIXED orders with rice partitions and the escape-to-raw
-    path, LPC with quantized coefficients, and all four channel
-    layouts (independent, left/side, right/side, mid/side) round-trip
-    EXACTLY through the in-test encoder (lossless: decode(encode(x))
-    == x bit-for-bit), mono/stereo, 8/16-bit, multi-frame."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_audio
-
-    rng = np.random.default_rng(1)
-
-    def rt(chans, **kw):
-        payload = _flac_encode([list(map(int, c)) for c in chans], **kw)
-        got = decode_audio(payload)
-        bps = kw.get("bps", 16)
-        want = (np.array(chans, dtype=np.float64) / (1 << (bps - 1))).astype(
-            np.float32
-        )
-        want = want[0] if len(chans) == 1 else want.T
-        assert got.shape == want.shape and np.array_equal(got, want), kw
-
-    x = rng.integers(-3000, 3000, 700, dtype=np.int64)
-    y = rng.integers(-3000, 3000, 700, dtype=np.int64)
-    rt([x], mode="verbatim")
-    rt([x], mode="fixed2")
-    rt([np.full(700, 123, np.int64)], mode="constant")
-    rt([x], mode="fixed3p", block=512)   # rice partition order 2
-    rt([x], mode="fixed1esc", block=128)  # escape-to-raw partition
-    rt([x], mode="lpc")                  # quantized-coefficient LPC
-    rt([x, y], stereo="none")
-    rt([x, y], stereo="ms")
-    rt([x, y], stereo="ls")
-    rt([x, y], stereo="rs")
-    rt([rng.integers(-120, 120, 300, dtype=np.int64)], bps=8, mode="fixed2")
-
-
-def test_decode_flac_errors():
-    """Malformed FLAC raises ValueError: truncation, corrupted frame
-    payload (CRC-16 catches it), corrupted header byte (CRC-8)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from mapreducecf_spark.multimodal import decode_audio
-
-    rng = np.random.default_rng(2)
-    x = rng.integers(-3000, 3000, 300, dtype=np.int64)
-    good = _flac_encode([list(map(int, x))], mode="fixed2")
-    assert decode_audio(good).shape == (300,)
-    with _pytest.raises(ValueError):
-        decode_audio(good[:60])  # truncated mid-frame
-    bad = bytearray(good)
-    bad[-20] ^= 0xFF  # flip a residual byte: CRC-16 must catch it
-    with _pytest.raises(ValueError):
-        decode_audio(bytes(bad))
-    bad2 = bytearray(good)
-    # corrupt the first frame header's channel bits (CRC-8 catches it)
-    hdr_at = good.index(b"\xff\xf8")
-    bad2[hdr_at + 3] ^= 0x10
-    with _pytest.raises(ValueError):
-        decode_audio(bytes(bad2))
-    # ADVICE r17: a frame declaring its own bps must AGREE with
-    # STREAMINFO (code 4 = 16-bit matches and decodes; code 2 =
-    # 12-bit mismatches and raises; code 3 is reserved and raises)
-    ok16 = _flac_encode([list(map(int, x))], mode="fixed2", frame_bps_code=4)
-    assert decode_audio(ok16).shape == (300,)
-    with _pytest.raises(ValueError, match="bits-per-sample"):
-        decode_audio(_flac_encode([list(map(int, x))], mode="fixed2",
-                                  frame_bps_code=2))
-    with _pytest.raises(ValueError, match="reserved FLAC bits-per-sample"):
-        decode_audio(_flac_encode([list(map(int, x))], mode="fixed2",
-                                  frame_bps_code=3))
-
-
-def test_decode_tiff_tiles_deflate_and_16bit():
-    """The r17 TIFF extensions round-trip exactly: Deflate
-    (Compression 8) strips incl. with Predictor 2; TILED layout with
-    padded edge tiles cropped (tile grid != image grid), across
-    compressions; 16-bit samples in both byte orders (decode scales
-    >>8 to the uint8 contract), incl. 16-bit with Predictor 2 and
-    16-bit inside tiles."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    rng = np.random.default_rng(9)
-    rgb = rng.integers(0, 256, (37, 23, 3), dtype=np.uint8)
-    grey3 = lambda g: np.repeat(g[..., None], 3, axis=2)  # noqa: E731
-
-    # deflate strips, with and without predictor
-    assert np.array_equal(decode_image(_tiff_encode(rgb, "<", 8, rows_per_strip=9)), rgb)
-    assert np.array_equal(
-        decode_image(_tiff_encode(rgb, ">", 8, rows_per_strip=9, predictor=2)), rgb
-    )
-    # tiled: 16x16 tiles over a 37x23 image (edge padding cropped)
-    for comp in (1, 5, 8, 32773):
-        got = decode_image(_tiff_encode(rgb, "<", comp, tile=(16, 16)))
-        assert np.array_equal(got, rgb), comp
-    # 16-bit: decode takes the high byte
-    g16 = rng.integers(0, 65536, (21, 18), dtype=np.uint16)
-    want = grey3((g16 >> 8).astype(np.uint8))
-    for bo in ("<", ">"):
-        got = decode_image(_tiff_encode(g16, bo, 1, bits=16))
-        assert np.array_equal(got, want), bo
-    got = decode_image(_tiff_encode(g16, "<", 8, bits=16, predictor=2))
-    assert np.array_equal(got, want)
-    rgb16 = rng.integers(0, 65536, (19, 27, 3), dtype=np.uint16)
-    want_rgb = (rgb16 >> 8).astype(np.uint8)
-    got = decode_image(_tiff_encode(rgb16, ">", 5, bits=16, tile=(16, 8), predictor=2))
-    assert np.array_equal(got, want_rgb)
-
-
 def test_decoder_error_contract_under_corruption():
-    """CORRUPTION FUZZ of the drop-path contract (the bug class
-    ADVICE r16 caught escaping the VP8L decoder): for every natively
-    decoded format, random truncations / bit flips / garbage splices
-    of a valid payload must either decode or raise ValueError /
-    NotImplementedError — never IndexError, struct.error, stdlib
-    RuntimeError, numpy shape errors, or a multi-GB allocation — so
-    the Arrow image/audio feature stages can drop malformed rows
-    instead of dying. Seeded rng: the exact corruption set replays."""
-    import struct
-    import zlib
-
+    """CORRUPTION FUZZ of the drop-path contract: for every natively
+    decoded format (PNG, BMP, PNM, WAV PCM), random truncations / bit
+    flips / garbage splices of a valid payload must either decode or
+    raise ValueError / NotImplementedError — never IndexError,
+    struct.error, stdlib RuntimeError, numpy shape errors, or a
+    multi-GB allocation — so the Arrow image/audio feature stages can
+    drop malformed rows instead of dying. Seeded rng: the exact
+    corruption set replays."""
     import numpy as np
 
-    from mapreducecf_spark.multimodal import decode_audio, decode_image
+    from mapreducecf_spark.multimodal import (
+        bmp24_bytes, decode_audio, decode_image, wav_pcm16_bytes)
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, (24, 20, 3), dtype=np.uint8)
-    g16 = rng.integers(0, 65536, (12, 14), dtype=np.uint16)
-
-    def png_rgb(img):
-        h, w, _ = img.shape
-        raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
-
-        def chunk(t, d):
-            c = t + d
-            return struct.pack(">I", len(d)) + c + struct.pack(">I", zlib.crc32(c))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-        )
-
     x = rng.integers(-3000, 3000, 400, dtype=np.int64)
-    adpcm, _ = _ima_encode(rng.integers(-30000, 30000, 18, dtype=np.int64), 1, 9)
-    g711_fmt = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-    g711_d = bytes(range(256))
     image_payloads = {
-        "png": png_rgb(img),
+        "png": _encode_png(img, [0]),
+        "bmp": bmp24_bytes(img),
         "ppm": b"P6\n20 24\n255\n" + img.tobytes(),
-        "jpeg": _jpeg_encode(img),
-        "jpeg_prog": _jpeg_encode_progressive(img),
-        "tiff_lzw_pred": _tiff_encode(img, "<", 5, rows_per_strip=8, predictor=2),
-        "tiff_16_tiled": _tiff_encode(g16, ">", 8, bits=16, tile=(16, 8)),
-        "webp_vp8": bytes.fromhex(_WEBP_VP8_HEX),
-        "webp_vp8l": bytes.fromhex(_WEBP_GRAD_HEX),
     }
-    audio_payloads = {
-        "flac": _flac_encode([list(map(int, x))], mode="fixed2"),
-        "adpcm": adpcm,
-        "g711": (
-            b"RIFF" + struct.pack("<I", 4 + 8 + len(g711_fmt) + 8 + len(g711_d))
-            + b"WAVE" + b"fmt " + struct.pack("<I", len(g711_fmt)) + g711_fmt
-            + b"data" + struct.pack("<I", len(g711_d)) + g711_d
-        ),
-    }
+    audio_payloads = {"wav_pcm16": wav_pcm16_bytes(x)}
 
     def fuzz(name, payload, decode, n=120):
         r = np.random.default_rng(12345)
@@ -2826,165 +588,6 @@ def test_decoder_error_contract_under_corruption():
         fuzz(name, p, decode_image)
     for name, p in audio_payloads.items():
         fuzz(name, p, decode_audio)
-
-
-# ---------------------------------------------------------------------
-# TIFF vs the SYSTEM libtiff reference codec (ADVICE r17: the
-# round-trip tests above share an in-test encoder with the decoder, so
-# a shared misunderstanding — LZW early-change schedule, predictor
-# width — would pass them; these payloads are generated by real
-# libtiff, the same validation libwebp gives VP8/VP8L)
-# ---------------------------------------------------------------------
-def _libtiff():
-    """ctypes handle to the system libtiff, or None — the hex-pinned
-    regression below runs without it; the structured sweep uses it as
-    the reference encoder."""
-    import ctypes
-
-    try:
-        lib = ctypes.CDLL("libtiff.so.6")
-    except OSError:
-        return None
-    lib.TIFFOpen.restype = ctypes.c_void_p
-    lib.TIFFOpen.argtypes = [ctypes.c_char_p, ctypes.c_char_p]
-    lib.TIFFWriteScanline.argtypes = [
-        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_uint32, ctypes.c_uint16]
-    lib.TIFFWriteTile.restype = ctypes.c_long
-    lib.TIFFWriteTile.argtypes = [
-        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_uint32, ctypes.c_uint32,
-        ctypes.c_uint32, ctypes.c_uint16]
-    lib.TIFFClose.argtypes = [ctypes.c_void_p]
-    return lib
-
-
-def _libtiff_enc(lib, img, comp=5, pred=None, rps=7, tile=None):
-    """Encode via libtiff: strip layout by scanlines, or tiled when
-    ``tile=(tw, tl)``. NOTE libtiff's predictor differences the
-    caller's buffer IN PLACE — always pass a copy."""
-    import ctypes
-    import os
-    import tempfile
-
-    import numpy as np
-
-    h, w = img.shape[:2]
-    spp = 1 if img.ndim == 2 else img.shape[2]
-    fd, path = tempfile.mkstemp(suffix=".tif")
-    os.close(fd)
-    try:
-        tif = lib.TIFFOpen(path.encode(), b"w")
-        assert tif, "libtiff open failed"
-        tp = ctypes.c_void_p(tif)
-
-        def sf(tag, v):
-            assert lib.TIFFSetField(tp, ctypes.c_uint32(tag), ctypes.c_int(v))
-
-        sf(256, w)
-        sf(257, h)
-        sf(258, 8 if img.dtype == np.uint8 else 16)
-        sf(259, comp)
-        sf(262, 2 if spp == 3 else 1)
-        sf(277, spp)
-        sf(284, 1)
-        if pred:
-            sf(317, pred)
-        if tile is None:
-            sf(278, rps)
-            for r in range(h):
-                row = img[r].copy()
-                assert lib.TIFFWriteScanline(
-                    tp, row.ctypes.data_as(ctypes.c_void_p), r, 0) == 1
-        else:
-            tw, tl = tile
-            sf(322, tw)
-            sf(323, tl)
-            for ty in range(0, h, tl):
-                for tx in range(0, w, tw):
-                    buf = np.zeros(
-                        (tl, tw) + (() if img.ndim == 2 else (spp,)),
-                        dtype=img.dtype)
-                    sub = img[ty:ty + tl, tx:tx + tw]
-                    buf[:sub.shape[0], :sub.shape[1]] = sub
-                    assert lib.TIFFWriteTile(
-                        tp, buf.ctypes.data_as(ctypes.c_void_p),
-                        tx, ty, 0, 0) > 0
-        lib.TIFFClose(tp)
-        with open(path, "rb") as f:
-            return f.read()
-    finally:
-        os.unlink(path)
-
-
-def test_decode_tiff_vs_libtiff_reference():
-    """Structured sweep against payloads produced by the SYSTEM
-    libtiff: strips × {LZW, LZW+predictor2, Deflate+predictor2,
-    PackBits} over RGB/grey, 16-bit LZW+predictor2, and TILED layout
-    with padded edge tiles × {LZW, LZW+p2, Deflate+p2} — our decoder
-    must reproduce the source pixels exactly (16-bit via the >>8
-    contract)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    lib = _libtiff()
-    if lib is None:
-        _pytest.skip("libtiff not available")
-    rng = np.random.default_rng(7)
-    rgb = rng.integers(0, 256, (21, 17, 3), dtype=np.uint8)
-    grey = rng.integers(0, 256, (21, 17), dtype=np.uint8)
-    rgb16 = rng.integers(0, 65536, (13, 11, 3), dtype=np.uint16)
-    cases = [
-        (rgb, rgb, dict(comp=5)),
-        (rgb, rgb, dict(comp=5, pred=2)),
-        (rgb, rgb, dict(comp=8, pred=2)),
-        (rgb, rgb, dict(comp=32773)),
-        (grey, np.repeat(grey[:, :, None], 3, axis=2), dict(comp=5, pred=2)),
-        (rgb16, (rgb16 >> 8).astype(np.uint8), dict(comp=5, pred=2)),
-    ]
-    for src, want, kw in cases:
-        got = decode_image(_libtiff_enc(lib, src, **kw))
-        assert np.array_equal(got, want), kw
-    edge = rng.integers(0, 256, (37, 29, 3), dtype=np.uint8)
-    for kw in (dict(comp=5), dict(comp=5, pred=2), dict(comp=8, pred=2)):
-        got = decode_image(_libtiff_enc(lib, edge, tile=(16, 16), **kw))
-        assert np.array_equal(got, edge), ("tiled", kw)
-
-
-#: a fixed libtiff-4.5-generated payload (24x19 RGB deterministic
-#: gradient (r*13 + c*7 + ch*5) % 256, LZW + predictor 2, 8-row
-#: strips) — the no-dependency regression pin
-_LIBTIFF_LZWP2_HEX = (
-    "49492a00d4000000800000a0a03c160d0784426150b864301a120bc3625138a4"
-    "2c341f12456351b8609c58318e48644341c8fa45278d1048c4b944b6244e2996"
-    "25d338516cc0659a4e60d010801a0da7203c160d0784426150b86430ea7a3fc3"
-    "625138a42d048746456351b8623d28998e486449c50a9a45278d2a55cb3944b6"
-    "24b65db025d338530d90cd9a4e60d01080341aada03c160d0784426150b86431"
-    "bae273c3625138a42dd4ef7a456351b863ddf8018e48644040483a45278d0442"
-    "c1b944b6241e118a25d33850ac60359a4e60d0100b0000010300010000001300"
-    "000001010300010000001800000002010300030000005e010000030103000100"
-    "00000500000006010300010000000200000011010400030000006a0100001501"
-    "0300010000000300000016010300010000000800000017010300030000006401"
-    "00001c01030001000000010000003d0103000100000002000000000000000800"
-    "08000800440044004400080000004c00000090000000"
-)
-
-
-def test_decode_tiff_libtiff_pinned_payload():
-    """The hex-embedded libtiff-generated LZW+predictor2 payload
-    decodes to its deterministic gradient — pinned so the decoder
-    stays honest against REAL libtiff output even where the system
-    library is absent."""
-    import numpy as np
-
-    from mapreducecf_spark.multimodal import decode_image
-
-    h, w = 24, 19
-    r_, c_, ch_ = np.meshgrid(
-        np.arange(h), np.arange(w), np.arange(3), indexing="ij")
-    want = ((r_ * 13 + c_ * 7 + ch_ * 5) % 256).astype(np.uint8)
-    got = decode_image(bytes.fromhex(_LIBTIFF_LZWP2_HEX))
-    assert np.array_equal(got, want)
 
 
 def test_wav_and_bmp_builders_roundtrip_real_decoders():

@@ -36,8 +36,11 @@ def _go_cold(spark) -> None:
     from mapreducecf_spark.queries import similarity, storage
 
     memo.evict()  # all session-memoized DataFrames (unpersists them)
+    similarity._NVEC_CACHE.clear()  # driver-side corpus-count memo
+    similarity._QUERY_IDS_MEMO.clear()  # driver-side query-batch id memo
     similarity._CODEBOOK_MEMO.clear()  # driver-side k-means memo
     similarity._PQ_CB_MEMO.clear()  # driver-side trained-PQ-codebook memo
+    similarity._BQ_STATS_MEMO.clear()  # driver-side 1-bit quantizer stats
     storage._WRITTEN.clear()  # cold storage round-trips re-write
     spark.catalog.clearCache()
 
