@@ -103,20 +103,16 @@ lshp AS (SELECT coalesce(min(r), {LSH_MAX_ROWS}) AS r
                (SELECT count(*) FROM embeddings WHERE embedding IS NOT NULL))
 """
 
-_NVEC_CACHE: dict[tuple, int] = {}
-_NVEC_LOCK = __import__("threading").Lock()
-
-
 def lsh_rows(spark: SparkSession, sf_dir: str) -> int:
-    """Adaptive rows-per-band for this corpus (cached per session ×
-    sf_dir: one parquet count, a metadata-cheap action)."""
-    app_id = spark.sparkContext.applicationId
-    with _NVEC_LOCK:
-        key = (app_id, sf_dir)
-        n = _NVEC_CACHE.get(key)
-        if n is None:
-            n = _NVEC_CACHE[key] = load_vectors(spark, sf_dir).count()
-        return lsh_rows_for(n)
+    """Adaptive rows-per-band for this corpus (the corpus count is
+    session-memoized per sf_dir: one parquet count, a metadata-cheap
+    action)."""
+    from mapreducecf_spark.memo import session_value
+
+    n = session_value(
+        spark, ("corpus_count", sf_dir), lambda: load_vectors(spark, sf_dir).count()
+    )
+    return lsh_rows_for(n)
 
 
 def _plane_component(p: int, j: int) -> float:
@@ -231,19 +227,14 @@ def _query_batch(e: DataFrame) -> DataFrame:
     )
 
 
-_QUERY_IDS_MEMO: dict[tuple, list] = {}
-
-
 def query_ids(spark: SparkSession, sf_dir: str) -> list[int]:
     """The query-batch ids as a plain list ({QUERY_CAP} bigints) — for
     consumers that need a MEMBERSHIP PREDICATE over the corpus (PPR's
     teleport CASE) rather than a projected batch. Bounded driver
-    transfer by construction; memoized like ``_pq_codebook``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QUERY_IDS_MEMO:
-        app_id = key[0]
-        for k in [k for k in _QUERY_IDS_MEMO if k[0] != app_id]:
-            _QUERY_IDS_MEMO.pop(k, None)
+    transfer by construction; session-memoized per sf_dir."""
+    from mapreducecf_spark.memo import session_value
+
+    def build() -> list[int]:
         rows = (
             load_vectors(spark, sf_dir)
             .select("vec_id", F.md5(F.col("vec_id").cast("string")).alias("hk"))
@@ -251,8 +242,9 @@ def query_ids(spark: SparkSession, sf_dir: str) -> list[int]:
             .limit(QUERY_CAP)
             .collect()
         )
-        _QUERY_IDS_MEMO[key] = sorted(r["vec_id"] for r in rows)
-    return _QUERY_IDS_MEMO[key]
+        return sorted(r["vec_id"] for r in rows)
+
+    return session_value(spark, ("query_ids", sf_dir), build)
 
 
 def _cos(a_emb: Column, a_nrm: Column, b_emb: Column, b_nrm: Column) -> Column:
@@ -972,14 +964,6 @@ KMEANS_NLIST = 8
 KMEANS_ROUNDS = 3
 
 
-#: trained-codebook memo: (spark applicationId, sf_dir) -> cent list
-#: (nlist tiny [cid, components] literals). Training is deterministic,
-#: so reuse is semantics-preserving; sim_kmeans_codebook and sim_ivf_knn
-#: share one training pass instead of each running the Lloyd rounds.
-#: This is also the honest 100 TB shape — train once, probe many; at
-#: cluster scale the equivalent is a persisted codebook table.
-_CODEBOOK_MEMO: dict[tuple[str, str], list] = {}
-
 #: k-means|| seeding (Bahmani et al., "Scalable K-Means++", VLDB'12):
 #: oversampling rounds and factor. ELL = 2k picks ~2k candidates per
 #: round in expectation, so the candidate set stays O(k) — collected
@@ -1169,11 +1153,12 @@ def _kmeanspar_seeds(spark: SparkSession, ev: DataFrame) -> list:
     return [(i + 1, emb) for i, (_vid, emb) in enumerate(chosen)]
 
 
-def _kmeans_codebook(spark: SparkSession, e: DataFrame, sf_dir: str | None = None):
+def _kmeans_train(
+    spark: SparkSession, e: DataFrame, sf_dir: str | None
+) -> tuple[DataFrame, list]:
     """Run {KMEANS_ROUNDS} fixed Lloyd rounds over the normed table
-    ``e`` and return ``(cent_df, assign_df)``: the final codebook
-    (cid, c_emb, c_nrm) and every vector's final list assignment
-    (vec_id, cid).
+    ``e`` and return ``(ev, cent)``: the (vec_id, embedding) view the
+    rounds scanned and the trained [cid, components] centroid list.
 
     Determinism (the whole point — the oracle replays the same rounds):
     seeds come from the deterministic k-means|| oversampling of
@@ -1197,21 +1182,15 @@ def _kmeans_codebook(spark: SparkSession, e: DataFrame, sf_dir: str | None = Non
     IVF training ships codebooks), and collecting it keeps each round's
     assignment plan flat instead of stacking {KMEANS_ROUNDS} rounds of
     lineage. Each round costs one scan of ``e`` + one partial-agg
-    shuffle of (cid, dim) cells. The trained centroids are memoized per
-    (session, sf_dir) — see ``_CODEBOOK_MEMO``."""
+    shuffle of (cid, dim) cells.
+
+    With ``sf_dir`` set, the trained centroid list (nlist tiny [cid,
+    components] literals) is session-memoized per sf_dir: training is
+    deterministic, so sim_kmeans_codebook, sim_ivf_knn and the other
+    consumers share one training pass — train once, probe many; at
+    cluster scale the equivalent is a persisted codebook table."""
     import numpy as np
 
-    app_id = spark.sparkContext.applicationId
-    memo_key = (app_id, sf_dir) if sf_dir is not None else None
-    # same hygiene as memo.session_memo: entries for stopped
-    # applications are unreachable (the key embeds applicationId) but
-    # would accumulate forever in a long-lived multi-session process.
-    # pop(default) so two threads racing the same stale key can't
-    # KeyError each other (memo.py takes a lock; a tolerant pop is
-    # enough here — the value is a plain list, no build to serialize)
-    for k in list(_CODEBOOK_MEMO):
-        if k[0] != app_id:
-            _CODEBOOK_MEMO.pop(k, None)
     ev = e.select("vec_id", "embedding")
     if sf_dir is not None:
         # adaptive input spread (r18, guide §2.5): each seeding/Lloyd
@@ -1260,8 +1239,7 @@ def _kmeans_codebook(spark: SparkSession, e: DataFrame, sf_dir: str | None = Non
 
         return fn
 
-    cent = _CODEBOOK_MEMO.get(memo_key) if memo_key is not None else None
-    if cent is None:
+    def train() -> list:
         cent = _kmeanspar_seeds(spark, ev)
         for _ in range(KMEANS_ROUNDS):
             cent = sorted(
@@ -1306,15 +1284,30 @@ def _kmeans_codebook(spark: SparkSession, e: DataFrame, sf_dir: str | None = Non
                     .collect()
                 )
             )
-        if memo_key is not None:
-            _CODEBOOK_MEMO[memo_key] = cent
+        return cent
+
+    if sf_dir is None:
+        return ev, train()
+    from mapreducecf_spark.memo import session_value
+
+    return ev, session_value(spark, ("kmeans_codebook", sf_dir), train)
+
+
+def _kmeans_codebook(spark: SparkSession, e: DataFrame, sf_dir: str | None = None):
+    """Train the codebook over the normed table ``e``
+    (:func:`_kmeans_train`) and return ``(cent_df, assign_df)``: the
+    final codebook (cid, c_emb, c_nrm) and every vector's final list
+    assignment (vec_id, cid)."""
+    import numpy as np
+
+    ev, cent = _kmeans_train(spark, e, sf_dir)
     # final list assignment against the FINAL codebook (standard IVF:
     # train, then assign everything to its nearest final centroid) —
     # one more Arrow map stage, no join, no shuffle
     final_cent = spark.createDataFrame(
         cent, "cid int, c_emb array<double>"
     ).withColumn("c_nrm", _norm(F.col("c_emb")))
-    cids_f, cn_f = _cmat(cent)
+    cids_f, cn_f = _codebook_cmat(cent)
 
     def assign_fn(batches):
         import pandas as pd
@@ -1326,7 +1319,7 @@ def _kmeans_codebook(spark: SparkSession, e: DataFrame, sf_dir: str | None = Non
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "cid": cids_f[_best(V, cn_f)].astype(np.int32),
+                    "cid": cids_f[_codebook_best(V, cn_f)].astype(np.int32),
                 }
             )
 
@@ -2213,18 +2206,9 @@ def _capped_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def codebook_centroids(spark: SparkSession, sf_dir: str) -> list:
-    """The memoized raw centroid list, TRAINING the codebook if this
-    session doesn't hold one yet. Consumers must use this instead of
-    indexing ``_CODEBOOK_MEMO`` directly: the ``semdedup_members``
-    session memo and the driver-side codebook memo are separate stores
-    cleared by separate calls (r06 advice), so a populated member
-    index does not guarantee a populated codebook."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cent = _CODEBOOK_MEMO.get(key)
-    if cent is None:
-        _kmeans_codebook(spark, _with_norm(load_vectors(spark, sf_dir)), sf_dir)
-        cent = _CODEBOOK_MEMO[key]
-    return cent
+    """The session's trained raw centroid list for ``sf_dir``; a miss
+    trains the codebook."""
+    return _kmeans_train(spark, _with_norm(load_vectors(spark, sf_dir)), sf_dir)[1]
 
 
 @register(
@@ -2465,12 +2449,10 @@ PQ_KMPP_ELL = 2 * PQ_K
 PQ_LLOYD_ROUNDS = 2
 
 
-#: trained sub-codebook memo: (applicationId, sf_dir) -> codebook.
 #: Canonical codebook type everywhere in the PQ family: an M-list of
 #: (cids, mat) — cids the surviving 1-based centroid ids ASCENDING
 #: (a Lloyd round drops a centroid no subvector chose; both engines
 #: share that rule), mat the matching (K_m, {PQ_SUB}) rounded rows.
-_PQ_CB_MEMO: dict[tuple, list] = {}
 
 
 def _pq_cb_from_vecs(vecs: list[list[float]]) -> list:
@@ -2666,16 +2648,23 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> list:
     acceptance, rounded-micro assignment with cid tiebreak, rounded
     centroid averages), so the oracle replays seeding, assignment and
     averaging CTE-for-CTE — prototype-verified bitwise vs DuckDB
-    (128/128 centroids at sf0.01). Memoized per (session, sf_dir);
+    (128/128 centroids at sf0.01). Session-memoized per sf_dir;
     empty corpus -> []."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PQ_CB_MEMO:
-        return _PQ_CB_MEMO[key]
-    _pq_train_both(spark, sf_dir)
-    return _PQ_CB_MEMO[key]
+    return _pq_codebooks(spark, sf_dir)["raw"]
 
 
-def _pq_train_both(spark: SparkSession, sf_dir: str) -> None:
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> dict[str, list]:
+    """``{"raw", "res"}``: the session's raw-vector AND coarse-residual
+    PQ codebooks for ``sf_dir``, trained on a miss by
+    :func:`_pq_train_both`."""
+    from mapreducecf_spark.memo import session_value
+
+    return session_value(
+        spark, ("pq_codebooks", sf_dir), lambda: _pq_train_both(spark, sf_dir)
+    )
+
+
+def _pq_train_both(spark: SparkSession, sf_dir: str) -> dict[str, list]:
     """Train the raw-vector AND coarse-residual PQ codebooks in the
     SAME distributed passes (r18 opt, VERDICT r17 #5 / guide §1.2 "do
     fewer passes"): the two trainings ran the identical
@@ -2686,7 +2675,7 @@ def _pq_train_both(spark: SparkSession, sf_dir: str) -> None:
     jobs; per (src, m) every seed pick, weight, assignment and
     centroid mean is bit-identical to the standalone run (sources
     never interact — pinned by pytest), so both oracles replay
-    unchanged. Populates both ``_PQ_CB_MEMO`` keys."""
+    unchanged."""
     from mapreducecf_spark.sources.tables import spread
 
     # adaptive input spread (guide §2.5): every training pass maps the
@@ -2706,13 +2695,7 @@ def _pq_train_both(spark: SparkSession, sf_dir: str) -> None:
         _residual_vectors(spark, sf_dir).select("vec_id", "embedding"),
         "vec_id",
     )
-    cbs = _pq_train_fused(spark, {"raw": raw, "res": res})
-    app_id = spark.sparkContext.applicationId
-    # bounded eviction, same hygiene as memo.session_memo
-    for k in [k for k in _PQ_CB_MEMO if k[0] != app_id]:
-        _PQ_CB_MEMO.pop(k, None)
-    _PQ_CB_MEMO[(app_id, sf_dir)] = cbs["raw"]
-    _PQ_CB_MEMO[(app_id, sf_dir, "res")] = cbs["res"]
+    return _pq_train_fused(spark, {"raw": raw, "res": res})
 
 
 def _pq_train(spark: SparkSession, ev: DataFrame) -> list:
@@ -3486,33 +3469,25 @@ statsj AS MATERIALIZED (
 """
 
 
-_SQ8_STATS_MEMO: dict[tuple, object] = {}
-
-
 def _sq8_stats(spark: SparkSession, sf_dir: str):
     """Per-dimension (lo, hi) over the corpus — ONE narrow agg scan,
     bounded driver transfer by construction ({DIM}×2 doubles), turned
     into plan-time literals so the encode is scan-fused arithmetic.
-    Driver-memoized per (app, sf) like the PQ seed sample (two
-    consumers: encode + recall). Returns None on an empty corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SQ8_STATS_MEMO:
-        return _SQ8_STATS_MEMO[key]
-    for k in [k for k in _SQ8_STATS_MEMO if k[0] != key[0]]:
-        _SQ8_STATS_MEMO.pop(k)
-    e = load_vectors(spark, sf_dir)
-    aggs = []
-    for j in range(DIM):
-        x = F.element_at(F.col("embedding"), j + 1).cast("double")
-        aggs += [F.min(x).alias(f"lo{j}"), F.max(x).alias(f"hi{j}")]
-    row = e.agg(*aggs).collect()[0]
-    out = (
-        None
-        if row[0] is None
-        else [(float(row[f"lo{j}"]), float(row[f"hi{j}"])) for j in range(DIM)]
-    )
-    _SQ8_STATS_MEMO[key] = out
-    return out
+    Session-memoized per sf_dir (consumers: encode, recall and the
+    IVF code-budget sweep). Returns None on an empty corpus."""
+    from mapreducecf_spark.memo import session_value
+
+    def build():
+        aggs = []
+        for j in range(DIM):
+            x = F.element_at(F.col("embedding"), j + 1).cast("double")
+            aggs += [F.min(x).alias(f"lo{j}"), F.max(x).alias(f"hi{j}")]
+        row = load_vectors(spark, sf_dir).agg(*aggs).collect()[0]
+        if row[0] is None:
+            return None
+        return [(float(row[f"lo{j}"]), float(row[f"hi{j}"])) for j in range(DIM)]
+
+    return session_value(spark, ("sq8_stats", sf_dir), build)
 
 
 @register(
@@ -3973,35 +3948,27 @@ def sim_rp_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 # binary (1-bit) quantization — the RaBitQ-shaped end of the frontier
 # ---------------------------------------------------------------------
-_BQ_STATS_MEMO: dict[tuple, object] = {}
-
-
 def _bq_stats(spark: SparkSession, sf_dir: str):
     """Per-dimension integer-micro component sums + corpus count — the
     sign-threshold ingredients for the 1-bit codes. ONE narrow agg
-    scan, {DIM}+1 scalars to the driver, memoized per (app, sf) like
-    ``_sq8_stats``. Returns (n, [s_0..s_{DIM-1}]) or None on an empty
-    corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BQ_STATS_MEMO:
-        return _BQ_STATS_MEMO[key]
-    for k in [k for k in _BQ_STATS_MEMO if k[0] != key[0]]:
-        _BQ_STATS_MEMO.pop(k)
-    e = load_vectors(spark, sf_dir)
-    aggs = [F.count("*").alias("n")]
-    for j in range(DIM):
-        x = F.element_at(F.col("embedding"), j + 1).cast("double")
-        aggs.append(
-            F.sum(F.floor(x * 1000000.0).cast("bigint")).alias(f"s{j}")
-        )
-    row = e.agg(*aggs).collect()[0]
-    out = (
-        None
-        if row["n"] == 0
-        else (int(row["n"]), [int(row[f"s{j}"]) for j in range(DIM)])
-    )
-    _BQ_STATS_MEMO[key] = out
-    return out
+    scan, {DIM}+1 scalars to the driver, session-memoized per sf_dir
+    like ``_sq8_stats``. Returns (n, [s_0..s_{DIM-1}]) or None on an
+    empty corpus."""
+    from mapreducecf_spark.memo import session_value
+
+    def build():
+        aggs = [F.count("*").alias("n")]
+        for j in range(DIM):
+            x = F.element_at(F.col("embedding"), j + 1).cast("double")
+            aggs.append(
+                F.sum(F.floor(x * 1000000.0).cast("bigint")).alias(f"s{j}")
+            )
+        row = load_vectors(spark, sf_dir).agg(*aggs).collect()[0]
+        if row["n"] == 0:
+            return None
+        return int(row["n"]), [int(row[f"s{j}"]) for j in range(DIM)]
+
+    return session_value(spark, ("bq_stats", sf_dir), build)
 
 
 @register(
@@ -4506,13 +4473,9 @@ def _pq_residual_codebook(spark: SparkSession, sf_dir: str) -> list:
     """Trained per-subspace sub-codebooks over the coarse RESIDUALS —
     the exact :func:`_pq_train` recipe (k-means|| + Lloyd, shared
     Arrow passes, O(K) collects) pointed at the residual population;
-    driver-memoized beside the raw-vector codebook (and trained in
+    session-memoized beside the raw-vector codebook (and trained in
     the raw codebook's SAME fused passes — :func:`_pq_train_both`)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "res")
-    if key in _PQ_CB_MEMO:
-        return _PQ_CB_MEMO[key]
-    _pq_train_both(spark, sf_dir)
-    return _PQ_CB_MEMO[key]
+    return _pq_codebooks(spark, sf_dir)["res"]
 
 
 def pq_res_codes(spark: SparkSession, sf_dir: str) -> DataFrame:

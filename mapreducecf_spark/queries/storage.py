@@ -18,8 +18,8 @@ Exchange), and day-partitioned sinks are THE layout that lets a daily
 pipeline read one day, not the corpus. All writes land under the
 repo's ``spark-warehouse/`` (absolute path derived from this package's
 location, independent of the driver session's cwd/warehouse config)
-and are performed once per (session, sf) — rewrites are skipped via a
-side-effect memo, mirroring the write-once nature of real layouts.
+and are performed once per (session, sf) — rewrites are skipped via the
+session memo, mirroring the write-once nature of real layouts.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducecf_spark.functions import csum, csum_sql
+from mapreducecf_spark.memo import session_value
 from mapreducecf_spark.registry import ORACLE_ALIASES, register
 from mapreducecf_spark.sinks import read_table, write_bucketed_table, write_table
 from mapreducecf_spark.sources import load_table
@@ -42,24 +43,8 @@ _OUT_ROOT = os.path.join(
     "spark-warehouse",
 )
 
-#: (applicationId, artifact-key) pairs already written this session
-_WRITTEN: set[tuple[str, str]] = set()
-
-
 def _tag(sf_dir: str) -> str:
     return re.sub(r"[^A-Za-z0-9]+", "_", sf_dir).strip("_")
-
-
-def _once(spark: SparkSession, key: str, write) -> None:
-    """Run the side-effecting ``write`` once per (session, key)."""
-    app_id = spark.sparkContext.applicationId
-    # drop entries from stopped applications (same hygiene as
-    # memo.session_memo — bounded state in long-lived processes)
-    _WRITTEN.difference_update({k for k in _WRITTEN if k[0] != app_id})
-    full = (app_id, key)
-    if full not in _WRITTEN:
-        write()
-        _WRITTEN.add(full)
 
 
 N_BUCKETS = 8
@@ -103,7 +88,7 @@ def bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
             ot, ["c_custkey"], N_BUCKETS, sort_cols=["c_custkey"],
         )
 
-    _once(spark, f"bucketed_pair:{tag}", write)
+    session_value(spark, ("written", f"bucketed_pair:{tag}"), write)
     return spark.table(ct), spark.table(ot)
 
 
@@ -154,7 +139,7 @@ def partitioned_events(spark: SparkSession, sf_dir: str) -> str:
         )
         write_table(e, path, partition_cols=["day"], n_files=4)
 
-    _once(spark, f"partitioned_events:{tag}", write)
+    session_value(spark, ("written", f"partitioned_events:{tag}"), write)
     return path
 
 
@@ -227,7 +212,7 @@ def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "documents"), path, fmt="json", n_files=4
         )
 
-    _once(spark, f"documents_jsonl:{tag}", write)
+    session_value(spark, ("written", f"documents_jsonl:{tag}"), write)
     # declared schema: JSONL interchange readers ship the schema with
     # the data contract (inference re-scans the corpus at listing time
     # and fails outright on an empty drop)
@@ -272,7 +257,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_files=4,
         )
 
-    _once(spark, f"lineitem_orc:{tag}", write)
+    session_value(spark, ("written", f"lineitem_orc:{tag}"), write)
     d = read_table(spark, path, fmt="orc")
     return d.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n_items"),
@@ -318,7 +303,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write() -> None:
         write_table(proj, path, fmt="csv", n_files=4, header="true")
 
-    _once(spark, f"orders_csv:{tag}", write)
+    session_value(spark, ("written", f"orders_csv:{tag}"), write)
     back = (
         spark.read.schema(
             "o_orderkey bigint, o_orderstatus string, o_orderpriority string, "
@@ -410,7 +395,7 @@ def zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
             .parquet(path)
         )
 
-    _once(spark, f"lineitem_zorder:{tag}", write)
+    session_value(spark, ("written", f"lineitem_zorder:{tag}"), write)
     return path
 
 
@@ -502,7 +487,7 @@ def compacted_events(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .parquet(comp)
         )
 
-    _once(spark, f"compacted_events:{tag}", write)
+    session_value(spark, ("written", f"compacted_events:{tag}"), write)
     return frag, comp
 
 
@@ -629,7 +614,7 @@ def evolved_events(spark: SparkSession, sf_dir: str) -> str:
             .parquet(path)
         )
 
-    _once(spark, f"events_evolved:{tag}", write)
+    session_value(spark, ("written", f"events_evolved:{tag}"), write)
     return path
 
 
@@ -690,7 +675,7 @@ def kmv_sketch_table(spark: SparkSession, sf_dir: str) -> str:
         # one file: the whole table is |types| x KMV_K bigint rows
         write_table(sk, path, n_files=1)
 
-    _once(spark, f"kmv_sketch:{tag}", write)
+    session_value(spark, ("written", f"kmv_sketch:{tag}"), write)
     return path
 
 
@@ -748,7 +733,7 @@ def hll_sketch_table(spark: SparkSession, sf_dir: str) -> str:
         ).agg(F.hll_sketch_agg("user_id").alias("sk"))
         write_table(daily, path, n_files=1)
 
-    _once(spark, f"hll_sketch:{tag}", write)
+    session_value(spark, ("written", f"hll_sketch:{tag}"), write)
     return path
 
 
@@ -796,7 +781,7 @@ def kll_sketch_table(spark: SparkSession, sf_dir: str) -> str:
         ).agg(F.kll_sketch_agg_double("value", KLL_K).alias("sk"))
         write_table(daily, path, n_files=1)
 
-    _once(spark, f"kll_sketch:{tag}", write)
+    session_value(spark, ("written", f"kll_sketch:{tag}"), write)
     return path
 
 

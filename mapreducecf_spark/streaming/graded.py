@@ -430,7 +430,8 @@ def stream_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from mapreducecf_spark.queries.storage import _OUT_ROOT, _once, _tag
+    from mapreducecf_spark.memo import session_value
+    from mapreducecf_spark.queries.storage import _OUT_ROOT, _tag
 
     tag = _tag(sf_dir)
     ckpt = os.path.join(_OUT_ROOT, f"state_inspect_ckpt_{tag}")
@@ -451,7 +452,7 @@ def stream_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    _once(spark, f"state_inspect:{tag}", run)
+    session_value(spark, ("written", f"state_inspect:{tag}"), run)
     commits = os.path.join(ckpt, "commits")
     if not (os.path.isdir(commits) and any(
         not f.startswith(".") for f in os.listdir(commits)
@@ -818,7 +819,8 @@ def stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from mapreducecf_spark.queries.storage import _OUT_ROOT, _once, _tag
+    from mapreducecf_spark.memo import session_value
+    from mapreducecf_spark.queries.storage import _OUT_ROOT, _tag
     from mapreducecf_spark.streaming.windows import stream_events, write_stream_to_lake
 
     tag = _tag(sf_dir)
@@ -835,7 +837,7 @@ def stream_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty lake, not a missing path
         os.makedirs(out, exist_ok=True)
 
-    _once(spark, f"lake_rt:{tag}", write)
+    session_value(spark, ("written", f"lake_rt:{tag}"), write)
     from mapreducecf_spark.sources import load_table
 
     lake_schema = (

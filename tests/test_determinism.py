@@ -74,49 +74,103 @@ def _rows(spark, name, sf_dir):
 @pytest.mark.parametrize("name", _QUERIES)
 def test_result_is_partition_count_invariant(spark, sf_dir, name):
     from mapreducecf_spark import memo
-    from mapreducecf_spark.queries import similarity
 
     base = _rows(spark, name, sf_dir)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     # memoized intermediates were built at the old partitioning; evict
     # so the odd-partition run rebuilds everything under the new DOP
     memo.evict()
-    similarity._CODEBOOK_MEMO.clear()
-    similarity._PQ_CB_MEMO.clear()  # retrain the PQ codebook under the alt DOP
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try:
         alt = _rows(spark, name, sf_dir)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
         memo.evict()  # don't leave 7-partition artifacts for other tests
-        similarity._CODEBOOK_MEMO.clear()
-        similarity._PQ_CB_MEMO.clear()
     assert base == alt, f"{name}: result depends on shuffle partition count"
 
 
-def test_concurrent_memoized_queries_build_once(spark, sf_dir):
-    """Four threads race the same memoized family cold: the memo lock
+def _count_calls(monkeypatch, module, name: str) -> list:
+    """Wrap ``module.name`` so every call is recorded; returns the
+    (growing) list of recorded calls — one per artifact build when
+    ``name`` is the function only that artifact's build calls."""
+    calls = []
+    real = getattr(module, name)
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
+@pytest.mark.parametrize(
+    "call, key, counted",
+    [
+        # a DataFrame artifact, its build counted at the build function
+        ("sim_knn_graph", "knn_graph", "_build_knn_graph"),
+        # a driver-side value artifact, its build counted at its one scan
+        ("_sq8_stats", "sq8_stats", "load_vectors"),
+    ],
+    ids=["knn_graph", "sq8_stats"],
+)
+def test_concurrent_memoized_queries_build_once(
+    spark, sf_dir, monkeypatch, call, key, counted
+):
+    """Four threads race the same memoized artifact cold: the memo lock
     must serialize the first build (no double-build, no KeyError from
-    concurrent eviction) and every caller must get the same persisted
-    object and identical results."""
+    concurrent eviction) and every caller must get the same object and
+    identical results."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from mapreducecf_spark import memo
-    from mapreducecf_spark.queries.similarity import sim_knn_graph
+    from pyspark.sql import DataFrame
 
-    memo.evict(("knn_graph",))
+    from mapreducecf_spark import memo
+    from mapreducecf_spark.queries import similarity
+
+    memo.evict((key,))
+    builds = _count_calls(monkeypatch, similarity, counted)
 
     def run(_):
-        df = sim_knn_graph(spark, sf_dir)
-        return df, sorted((r["vec_id"], r["neighbor_id"]) for r in df.collect())
+        v = getattr(similarity, call)(spark, sf_dir)
+        return v, sorted(map(tuple, v.collect())) if isinstance(v, DataFrame) else v
 
     with ThreadPoolExecutor(max_workers=4) as ex:
         results = list(ex.map(run, range(4)))
-    dfs = {id(df) for df, _ in results}
-    assert len(dfs) == 1, "concurrent first callers built separate memo entries"
-    assert all(rows == results[0][1] for _, rows in results)
+    assert len(builds) == 1, f"{key}: {len(builds)} builds for 4 racing callers"
+    assert len({id(v) for v, _ in results}) == 1, "callers got separate builds"
+    assert all(out == results[0][1] for _, out in results)
     app = spark.sparkContext.applicationId
-    assert sum(1 for k in memo._MEMO if k[0] == app and k[1] == "knn_graph") == 1
+    assert sum(1 for k in memo._MEMO if k[0] == app and k[1] == key) == 1
+
+
+@pytest.mark.parametrize(
+    "module, call, counted",
+    [
+        ("timeseries", "mad_stats", "load_table"),  # DataFrame artifact
+        ("similarity", "_sq8_stats", "load_vectors"),  # value artifact
+    ],
+    ids=["mad_stats", "sq8_stats"],
+)
+def test_evict_forces_rebuild_of_every_artifact_kind(
+    spark, sf_dir, monkeypatch, module, call, counted
+):
+    """``memo.evict()`` reaches every session artifact: the call after
+    it rebuilds, and the call after that reuses the rebuilt one."""
+    import importlib
+
+    from mapreducecf_spark import memo
+
+    mod = importlib.import_module(f"mapreducecf_spark.queries.{module}")
+    fn = getattr(mod, call)
+    builds = _count_calls(monkeypatch, mod, counted)
+    fn(spark, sf_dir)
+    n = len(builds)
+    memo.evict()
+    fn(spark, sf_dir)
+    assert len(builds) == n + 1, f"{call}: evict() did not force a rebuild"
+    fn(spark, sf_dir)
+    assert len(builds) == n + 1, f"{call}: rebuilt without an evict()"
 
 
 def test_prewarm_covers_every_memoized_family(spark, sf_dir):
@@ -126,6 +180,8 @@ def test_prewarm_covers_every_memoized_family(spark, sf_dir):
     family member in the bench loop again (the r05 mis-attribution this
     phase exists to prevent). Constructing every registered query after
     prewarm must therefore add no new memo families."""
+    from pyspark.sql import DataFrame
+
     from mapreducecf_spark import memo
     from mapreducecf_spark.prewarm import build_shared_intermediates
     from mapreducecf_spark.registry import QUERIES
@@ -137,8 +193,18 @@ def test_prewarm_covers_every_memoized_family(spark, sf_dir):
     # per-parameter variant like the decontamination shingle index
     # (("shingles", sf_dir, DECON_K)) shares its family name with the
     # prewarmed default-k index and would slip through a name compare
-    before = {k[1:] for k in memo._MEMO if k[0] == app}
+    # DataFrame entries only, the scope this gate has always had:
+    # driver-side values (codebooks, stats, write-once storage layouts)
+    # share the store but are not part of prewarm's list
+    def df_keys() -> set:
+        return {
+            k[1:]
+            for k, v in memo._MEMO.items()
+            if k[0] == app and isinstance(v, DataFrame)
+        }
+
+    before = df_keys()
     for fn in QUERIES.values():
         fn(spark, sf_dir)
-    after = {k[1:] for k in memo._MEMO if k[0] == app}
+    after = df_keys()
     assert after == before, f"memo keys prewarm misses: {after - before}"

@@ -554,14 +554,12 @@ def test_drift_psi_has_no_explode(spark, sf_dir):
 def test_phash_neardup_no_cartesian_and_one_python_stage(spark, sf_dir):
     """Banded Hamming join: equi-join on (ci, ck), never a cross
     product; decode enters Python exactly once."""
+    from mapreducecf_spark import memo
     from mapreducecf_spark.registry import QUERIES
 
-    from mapreducecf_spark.memo import _MEMO  # noqa: F401
-
-    # evict any cached fingerprint table so the plan under test is the
-    # cold one (same eviction discipline as the other memo plan tests)
-    for k in [k for k in list(_MEMO) if "phash_chunks" in k]:
-        _MEMO.pop(k)
+    # evict (and unpersist) any cached fingerprint table so the plan
+    # under test is the cold one
+    memo.evict(("phash_chunks",))
     p = plan_str(QUERIES["mm_phash_neardup"](spark, sf_dir))
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p
     # the memoized fingerprint table feeds BOTH join sides from cache:

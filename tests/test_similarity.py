@@ -228,6 +228,8 @@ def test_session_memo_shares_builds(spark, sf_dir):
     edge list, embedding-LSH pairs, MinHash pairs/sigs and the shingle
     index are each built once per (session, sf_dir) and every family
     member receives the SAME persisted DataFrame object."""
+    from pyspark.sql import DataFrame
+
     from mapreducecf_spark import memo
     from mapreducecf_spark.queries import dedup as dd
     from mapreducecf_spark.queries.similarity import (
@@ -254,7 +256,11 @@ def test_session_memo_shares_builds(spark, sf_dir):
     assert s1 is s2
 
     app = spark.sparkContext.applicationId
-    keys = {k[1] for k in memo._MEMO if k[0] == app}
+    keys = {
+        k[1]
+        for k, v in memo._MEMO.items()
+        if k[0] == app and isinstance(v, DataFrame)
+    }
     assert {"knn_graph", "lsh_pairs", "minhash_pairs", "shingles"} <= keys
 
 
@@ -424,6 +430,7 @@ def test_binary_quant_recall_bounded_and_perfect_on_clusters(spark, sf_dir, monk
     neighbors perfectly — recall_micro == 1.0 — because in-cluster
     Hamming is 0 and cross-cluster is ~DIM/2, mirroring cosine."""
     import mapreducecf_spark.queries.similarity as sim
+    from mapreducecf_spark import memo
 
     r = sim.sim_binary_quant_recall(spark, sf_dir).collect()[0]
     n = sim.load_vectors(spark, sf_dir).count()
@@ -449,11 +456,11 @@ def test_binary_quant_recall_bounded_and_perfect_on_clusters(spark, sf_dir, monk
             rows.append((c * 100 + m, vec))
     planted = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     monkeypatch.setattr(sim, "load_vectors", lambda spark, sf_dir: planted)
-    sim._BQ_STATS_MEMO.clear()
+    memo.evict(("bq_stats",))
     try:
         out = sim.sim_binary_quant_recall(spark, "-bq-planted").collect()[0]
     finally:
-        sim._BQ_STATS_MEMO.clear()
+        memo.evict(("bq_stats",))
     assert out["n_queries"] == 32
     assert out["recall_micro"] == 1.0
     assert out["min_recall"] == 1.0

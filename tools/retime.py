@@ -15,8 +15,10 @@ Usage::
     python tools/retime.py [sf_dir] query [query ...]
 
 Output: one line per query, ``name cold_s warm_s`` (plus a JSON tail
-line for scripts). Cold = all session memos evicted + cache cleared,
-then one timed run (the query pays its family's build, like a lone
+line for scripts). Cold = ``memo.evict()`` (every session artifact:
+memoized DataFrames, driver-side values such as trained codebooks, and
+the write-once storage layouts) + ``spark.catalog.clearCache()``, then
+one timed run (the query pays its family's build, like a lone
 production run against unmaterialized inputs). Warm = immediately
 re-run (family artifacts persisted, like the suite's steady state).
 """
@@ -33,15 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def _go_cold(spark) -> None:
     from mapreducecf_spark import memo
-    from mapreducecf_spark.queries import similarity, storage
 
-    memo.evict()  # all session-memoized DataFrames (unpersists them)
-    similarity._NVEC_CACHE.clear()  # driver-side corpus-count memo
-    similarity._QUERY_IDS_MEMO.clear()  # driver-side query-batch id memo
-    similarity._CODEBOOK_MEMO.clear()  # driver-side k-means memo
-    similarity._PQ_CB_MEMO.clear()  # driver-side trained-PQ-codebook memo
-    similarity._BQ_STATS_MEMO.clear()  # driver-side 1-bit quantizer stats
-    storage._WRITTEN.clear()  # cold storage round-trips re-write
+    memo.evict()  # every session artifact: DataFrames, values, writes
     spark.catalog.clearCache()
 
 
